@@ -3,10 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Round benchmark (driver contract): one JSON line with per-query seconds
-  * plus the headline metric — validated sequences/sec for the full
-  * constraint suite (row checks + dedup + referential + drift) over the
-  * deterministic generated sequence table (BASELINE.json `metric`).
+/** Round benchmark (driver contract): the headline metric — validated
+  * sequences/sec for the full constraint suite (row checks + dedup +
+  * referential + drift) over the deterministic generated sequence table
+  * (BASELINE.json `metric`) — plus per-query seconds of the driver-query
+  * battery. The last stdout line is a compact JSON summary (headline, suite
+  * wall time, failed queries, the scaling pair with its per-rep arrays);
+  * the per-query map goes only to `bench_result.json`. A battery query
+  * that throws is listed under `failed` with no timing, and the exit code
+  * is 1.
   *
   * Protocol (unified with BENCH_SCALING.md in r2 — VERDICT r1 #6): the
   * suite number is the MINIMUM of `reps` interleaved runs (this VM's wall
@@ -143,6 +148,8 @@ object Bench {
     // query (a single-shot battery on this 7×-jitter VM made round-over-
     // round per-query deltas meaningless — VERDICT r2 #3)
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
+    // a query that throws in any rep is a failure, never a timing
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
     withSession(cpus) { spark =>
       ensureParquet(spark, benchRows)
       ensureParquet(spark, scalingRows)
@@ -152,13 +159,18 @@ object Bench {
         battery.foreach { case (name, fn) =>
           System.err.println(s"[bench] battery rep $r: $name")
           val t0 = System.nanoTime()
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-          catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
-          val t = (System.nanoTime() - t0) / 1e9
-          results(name) = math.min(results.getOrElse(name, Double.MaxValue), t)
+          try {
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            val t = (System.nanoTime() - t0) / 1e9
+            results(name) = math.min(results.getOrElse(name, Double.MaxValue), t)
+          } catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: $e")
+            failed += name
+          }
         }
       }
     }
+    failed.foreach(results.remove)
 
     // interleaved suite reps: headline level then the scaling pair, fresh
     // session per run, identical bytes per rows-count. The PAIR gets extra
@@ -198,20 +210,30 @@ object Bench {
     val sec4N = times((4 * nCores, scalingRows)).min
     val eff = (scalingRows / sec4N) / (4 * (scalingRows / secN))
 
-    val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
+    def str(x: String) = "\"" + x + "\""
+    val qs = results.map { case (k, v) => str(k) + f":$v%.3f" }.mkString("{", ",", "}")
     val total = results.values.sum
     def arr(v: Vector[Double]) = v.map(t => f"$t%.2f").mkString("[", ",", "]")
     val allN = arr(times((nCores, scalingRows)))
     val all4N = arr(times((4 * nCores, scalingRows)))
-    val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","validated_seq_per_sec":$seqPerSec%.0f,"bench_rows":$benchRows,"cpus":$cpus,"reps":$reps,"batt_reps":$battReps,"scaling":{"rows":$scalingRows,"n_cores":$nCores,"sec_n":$secN%.3f,"sec_4n":$sec4N%.3f,"tput_n":${scalingRows / secN}%.0f,"tput_4n":${scalingRows / sec4N}%.0f,"efficiency":$eff%.3f,"pair_reps":$pairReps,"all_n":$allN,"all_4n":$all4N}}"""
+    val scaling = f"""{"rows":$scalingRows,"n_cores":$nCores,"sec_n":$secN%.3f,"sec_4n":$sec4N%.3f,"tput_n":${scalingRows / secN}%.0f,"tput_4n":${scalingRows / sec4N}%.0f,"efficiency":$eff%.3f,"pair_reps":$pairReps,"all_n":$allN,"all_4n":$all4N}"""
+    def line(queries: String, failedNames: Iterable[String]) =
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec",$queries"sf":"$sfDir","validated_seq_per_sec":$seqPerSec%.0f,"suite_s":$suiteSec%.3f,"bench_rows":$benchRows,"cpus":$cpus,"reps":$reps,"batt_reps":$battReps,"failed_n":${failed.size},"failed":${failedNames.map(str).mkString("[", ",", "]")},"scaling":$scaling}"""
+    // the full record (per-query map, every failed name) goes to the file;
+    // stdout's last line is the compact summary, kept under 1.5 KB so a
+    // reader of the output tail can parse it — failed names are listed
+    // while they fit, `failed_n` always counts them all
+    val full = line(s""""queries":$qs,""", failed)
+    var shown = failed.toSeq
+    while (line("", shown).length >= 1500) shown = shown.init
     // dedicated channels (VERDICT r3 #3): the JSON line goes to stdout RAW
-    // (build.sbt's StdoutOutput strategy strips sbt's [info] prefix) AND to
-    // a file, so the driver can parse either even if a logger interleaves
-    println(json)
+    // (build.sbt's StdoutOutput strategy strips sbt's [info] prefix) AND the
+    // full record to a file
+    println(line("", shown))
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_result.json"),
-      (json + "\n").getBytes("UTF-8"))
+      (full + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

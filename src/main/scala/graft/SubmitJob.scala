@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.run.{Suite, Validation}
+import graft.run.{Suite, Validator}
 import graft.spec.SpecParser
 import graft.stats.MetricsStore
 
@@ -26,6 +27,16 @@ import graft.stats.MetricsStore
   * referential dimension broadcasts, dedup is salted, and a killed run
   * resumes from the metrics store (results are written BEFORE state is
   * marked complete — Suite.resumableRun's ordering contract).
+  *
+  * One run: the stats sketches are computed and checkpointed (their
+  * emptiness is the resume check); the violations are written — the one
+  * full-width scan of the input, with uniqueness candidates and the drift
+  * cube materializing into checkpoints on the way; the verdicts are derived
+  * from this run's written violations plus the cube's per-part totals and
+  * written, while an `Observation` on that write counts the failing
+  * verdicts for the exit code; the stats are appended to the store. No
+  * action after the violations write reads the input, and nothing reads
+  * `verdicts/` back.
   *
   * Exit code: 0 = all constraints passed (or nothing left to validate),
   * 1 = violations found, 2 = bad usage.
@@ -64,17 +75,24 @@ object SubmitJob {
       .getOrElse(SpecParser.parse(graft.data.SequenceGen.SeqSpecJson))
     val out = opts("out")
 
-    // every output row carries this run's epoch (also the hive partition, so
-    // the gate read prunes to one partition): prior runs' failing verdicts —
-    // or rows duplicated when a crash between sink and store.append forces a
-    // re-validate + re-append — can no longer flip THIS run's exit code
-    // (ADVICE r2)
+    // every output row carries this run's epoch (also the hive partition):
+    // prior runs' failing verdicts — or rows duplicated when a crash between
+    // sink and store.append forces a re-validate + re-append — can no longer
+    // flip THIS run's exit code (ADVICE r2)
     val runEpoch = System.currentTimeMillis()
-    val sink: Validation => Unit = { v =>
-      v.verdicts.withColumn("run_epoch", lit(runEpoch))
-        .write.mode("append").partitionBy("run_epoch").parquet(s"$out/verdicts")
-      v.violations.withColumn("run_epoch", lit(runEpoch))
+    var failing = 0L
+    val sink: Suite.Planned => Unit = { p =>
+      p.violations.withColumn("run_epoch", lit(runEpoch))
         .write.mode("append").partitionBy("run_epoch").parquet(s"$out/violations")
+      // the verdicts derive from the violations just written: this run's
+      // epoch directory only, read with the known schema (no inference job)
+      val written = readEpoch(spark, s"$out/violations/run_epoch=$runEpoch")
+      val gate = Observation("gate")
+      p.verdictsOf(written).withColumn("run_epoch", lit(runEpoch))
+        .observe(gate, count(when(!col("pass"), true)).as("failing"))
+        .coalesce(1) // |parts| × |constraints| rows: one file
+        .write.mode("append").partitionBy("run_epoch").parquet(s"$out/verdicts")
+      failing = gate.get("failing").asInstanceOf[Long]
     }
 
     Suite.resumableRun(
@@ -86,12 +104,19 @@ object SubmitJob {
         println("graft: nothing to validate (all partitions checkpointed)")
         0
       case Some(_) =>
-        // gate on THIS run's persisted verdicts only (the sink already ran)
-        val failed = spark.read.parquet(s"$out/verdicts")
-          .where(col("run_epoch") === runEpoch && !col("pass")).count()
-        println(s"graft: run complete, $failed failing (part, constraint) verdicts")
-        if (failed == 0) 0 else 1
+        // gate on the counts the verdicts write observed, not a re-read
+        println(s"graft: run complete, $failing failing (part, constraint) verdicts")
+        if (failing == 0) 0 else 1
     }
+  }
+
+  /** One epoch's violation rows. A run without violations writes no epoch
+    * directory, which reads as no rows. */
+  private def readEpoch(spark: SparkSession, dir: String): DataFrame = {
+    val path = new Path(dir)
+    if (path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path))
+      spark.read.schema(Validator.violationSchema).parquet(dir)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), Validator.violationSchema)
   }
 
   /** Strict --key value pairs: an odd-length tail or a key without `--` is

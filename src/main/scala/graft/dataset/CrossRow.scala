@@ -20,9 +20,10 @@ import graft.run.Validation
   *    `duplicateKeys` for why the salt stage needs NO exchange of its own.
   *    The duplicate set (cnt > 1) is tiny relative to the table, so the
   *    join back to rows is AQE-broadcastable and skew-safe.
-  *  - Referential integrity is a BROADCAST left-anti join against the
-  *    dimension table (small by construction) — no shuffle of the fact side,
-  *    immune to hot-value skew.
+  *  - Referential integrity is a BROADCAST join against the dimension
+  *    table (small by construction) — no shuffle of the fact side, immune to
+  *    hot-value skew. `referentialCheck` marks rows for the row pass;
+  *    `referential` is the standalone left-anti form of the same predicate.
   */
 object CrossRow {
 
@@ -30,10 +31,14 @@ object CrossRow {
   val BaseRank = 1000
 
   /** The ONE dup-hash detection definition shared by `duplicateKeys` and
-    * `dupCandidates`: (projected row frame incl. `_kh`, the >1-hash set). */
+    * `dupCandidates`: (projected row frame incl. `_kh`, the >1-hash set).
+    * NULL keys never collide (SQL `UNIQUE` semantics), so they are dropped
+    * here — `xxhash64(NULL)` is the seed, which would otherwise alias every
+    * NULL key onto one "duplicated" hash. */
   private def dupHashDetection(df: DataFrame, key: String,
                                extra: Seq[Column]): (DataFrame, DataFrame) = {
-    val hashed = df.select(extra :+ col(key) :+ xxhash64(col(key)).as("_kh"): _*)
+    val hashed = df.where(col(key).isNotNull)
+      .select(extra :+ col(key) :+ xxhash64(col(key)).as("_kh"): _*)
     val dupHashes = hashed.select(col("_kh"))
       .groupBy(col("_kh"))
       .agg(count(lit(1)).as("_hc"))
@@ -60,8 +65,8 @@ object CrossRow {
     * formulation materialized the salt as a `spark_partition_id()` column
     * and paid a second full-data exchange on (key, salt) for groups that
     * were already partition-local: measured at 10⁷ rows that shape costs
-    * 8.4 s / 663 CPU-s vs 5.1 s / 342 CPU-s for this one, same output
-    * (tools/UniqProbe A/B). */
+    * 8.4 s / 663 CPU-s vs 5.1 s / 342 CPU-s for this one, same output.
+    * NULL keys are never reported (see `dupHashDetection`). */
   def duplicateKeys(df: DataFrame, key: String): DataFrame = {
     val (hashed, dupHashes) = dupHashDetection(df, key, Seq.empty)
     // exact re-count over only the candidate keys (dup set ≪ table; AQE
@@ -72,21 +77,9 @@ object CrossRow {
       .where(col("cnt") > 1)
   }
 
-  /** Per-part row totals — pass a precomputed (possibly driver-collected
-    * literal) frame to every cross-row check to avoid re-scanning for counts. */
+  /** Per-part row totals, the denominators of a check's verdicts. */
   def partTotals(df: DataFrame, part: String = "part"): DataFrame =
     df.groupBy(col(part).as("part")).agg(count(lit(1)).as("total"))
-
-  /** Collect totals to the driver (|parts| rows — partition metadata scale)
-    * and rebuild as a literal frame: downstream verdict joins then scan
-    * nothing. */
-  def partTotalsLiteral(df: DataFrame, part: String = "part"): DataFrame = {
-    val rows = partTotals(df, part).collect().toSeq
-    df.sparkSession.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](scala.jdk.CollectionConverters
-        .SeqHasAsJava(rows).asJava),
-      StructType(Seq(StructField("part", StringType), StructField("total", LongType))))
-  }
 
   /** Candidate rows for the uniqueness check: every (part, key) row whose
     * key HASH occurs more than once — i.e. the exact-recount input and the
@@ -130,9 +123,8 @@ object CrossRow {
     * materialization for a frame the broadcast path never shuffles. */
   def uniqueness(df: DataFrame, key: String = "doc_id",
                  part: String = "part", rank: Int = BaseRank,
-                 totals: Option[DataFrame] = None,
                  checkpointDups: Boolean = false): Validation = {
-    val id = s"dataset/unique:$key"
+    val id = uniqueId(key)
     val message = s"""Expected "$key" values to be unique across the dataset"""
 
     val violations =
@@ -159,31 +151,62 @@ object CrossRow {
             lit(message).as("message"))
       }
 
-    Validation(verdictsFromViolations(totals.getOrElse(partTotals(df, part)),
-      violations, rank, id), violations)
+    Validation(verdictsFromViolations(partTotals(df, part),
+      violations, Seq(rank -> id)), violations)
   }
 
-  /** Validation frames for "`column` ∈ dim(`dimCol`)" (FK). Nulls are not FK
-    * violations (that is `required`'s job), matching SQL FK semantics. */
+  def uniqueId(key: String): String = s"dataset/unique:$key"
+
+  /** The FK predicate, defined once: a row passes iff its `column` is NULL
+    * or equals a value of the de-duplicated dimension key. NULLs are not FK
+    * violations (that is `required`'s job), matching SQL FK semantics. The
+    * key set is broadcast (small by construction), so the fact side never
+    * shuffles and hot FK values cannot skew. `marked` feeds the row pass,
+    * where `pass` is evaluated per row; `orphans` is the same predicate's
+    * complement as one broadcast left anti join, for the standalone check. */
+  private final class ForeignKey(column: String, dim: DataFrame, dimCol: String) {
+    private val key = s"_fk_$column"
+    private val keys = broadcast(dim.select(col(dimCol).as(key)).distinct())
+    private val matches = col(column) === col(key)
+    def marked(df: DataFrame): DataFrame = df.join(keys, matches, "left_outer")
+    val pass: Column = col(column).isNull || col(key).isNotNull
+    def orphans(df: DataFrame): DataFrame =
+      df.where(col(column).isNotNull).join(keys, matches, "left_anti")
+  }
+
+  private def referentialId(column: String): String = s"dataset/referential:$column"
+  private def referentialMessage(column: String): String =
+    s"""Expected "$column" to reference a value in the dimension table"""
+
+  /** The FK check as a `CompiledCheck` for the row pass: returns `df` marked
+    * with its broadcast dimension match, and the check to evaluate over it,
+    * so the FK check shares the row checks' one full-width scan. */
+  def referentialCheck(df: DataFrame, column: String, dim: DataFrame, dimCol: String,
+                       rank: Int = BaseRank + 1): (DataFrame, CompiledCheck) = {
+    val fk = new ForeignKey(column, dim, dimCol)
+    (fk.marked(df), CompiledCheck(
+      id = referentialId(column), path = s".$column", keyword = "referential",
+      message = referentialMessage(column), rank = rank,
+      pass = fk.pass, observed = col(column).cast(StringType)))
+  }
+
+  /** Validation frames for "`column` ∈ dim(`dimCol`)" (FK), standalone:
+    * the orphan rows of the `ForeignKey` predicate. */
   def referential(df: DataFrame, column: String, dim: DataFrame, dimCol: String,
                   docId: String = "doc_id", part: String = "part",
-                  rank: Int = BaseRank + 1,
-                  totals: Option[DataFrame] = None): Validation = {
-    val id = s"dataset/referential:$column"
-    val message = s"""Expected "$column" to reference a value in the dimension table"""
+                  rank: Int = BaseRank + 1): Validation = {
+    val id = referentialId(column)
     val fact = df.select(col(part).as("part"), col(docId).cast(StringType).as("doc_id"),
                          col(column))
-      .where(col(column).isNotNull)
-    val violations = fact
-      .join(broadcast(dim.select(col(dimCol).as(column)).distinct), Seq(column), "left_anti")
+    val violations = new ForeignKey(column, dim, dimCol).orphans(fact)
       .select(
         col("part"), col("doc_id"),
         lit(rank).as("rank"), lit(id).as("constraint_id"),
         lit(s".$column").as("path"), col(column).cast(StringType).as("observed"),
-        lit(message).as("message"))
+        lit(referentialMessage(column)).as("message"))
 
-    Validation(verdictsFromViolations(totals.getOrElse(partTotals(df, part)),
-      violations, rank, id), violations)
+    Validation(verdictsFromViolations(partTotals(df, part),
+      violations, Seq(rank -> id)), violations)
   }
 
   /** FK check for dimension tables TOO LARGE to broadcast (`referential`'s
@@ -203,24 +226,22 @@ object CrossRow {
     * likewise not FK violations. */
   def referentialLargeDim(df: DataFrame, column: String, dim: DataFrame, dimCol: String,
                           docId: String = "doc_id", part: String = "part",
-                          rank: Int = BaseRank + 1,
-                          totals: Option[DataFrame] = None): Validation = {
-    val id = s"dataset/referential:$column"
-    val message = s"""Expected "$column" to reference a value in the dimension table"""
+                          rank: Int = BaseRank + 1): Validation = {
+    val id = referentialId(column)
     val fact = df.select(col(part).as("part"), col(docId).cast(StringType).as("doc_id"),
                          col(column))
       .where(col(column).isNotNull)
-    val orphanKeys = fact.select(col(column)).distinct
+    val orphanKeys = fact.select(col(column)).distinct()
       .join(dim.select(col(dimCol).as(column)), Seq(column), "left_anti")
     val violations = fact.join(broadcast(orphanKeys), Seq(column))
       .select(
         col("part"), col("doc_id"),
         lit(rank).as("rank"), lit(id).as("constraint_id"),
         lit(s".$column").as("path"), col(column).cast(StringType).as("observed"),
-        lit(message).as("message"))
+        lit(referentialMessage(column)).as("message"))
 
-    Validation(verdictsFromViolations(totals.getOrElse(partTotals(df, part)),
-      violations, rank, id), violations)
+    Validation(verdictsFromViolations(partTotals(df, part),
+      violations, Seq(rank -> id)), violations)
   }
 
   /** Row-level cross-field consistency as a pluggable CompiledCheck, e.g.
@@ -236,42 +257,26 @@ object CrossRow {
       pass = coalesce(ok, lit(false)),
       observed = observed.cast(StringType))
 
-  /** Referential-integrity VERDICT counts derived from a histogram cube
-    * that carries the FK column as dimension column `bucket` (Suite's drift
-    * cube): violations per part = Σ c over cells whose bucket value is
-    * absent from the dim. The verdicts action then touches NO row-level
-    * scan at all — the cube is already materialized for drift — while the
-    * row-level `referential(...).violations` frame stays the authoritative
-    * row fetch, executed only when violations are actually written.
-    *
-    * Count-equivalence to `referential` requires the cube's bucketing of
-    * the FK column to be the identity (string-typed FK; the cube casts
-    * dims to string) — gated row-for-row against the row-level verdicts in
-    * CrossRowSpec. Null FK values are not violations (cube cell with null
-    * bucket is excluded), matching `referential`. */
-  def referentialVerdictsFromCube(cube: DataFrame, bucket: String,
-                                  dim: DataFrame, dimCol: String,
-                                  totals: DataFrame, column: String,
-                                  rank: Int = BaseRank + 1): DataFrame = {
-    val vioCounts = cube.where(col(bucket).isNotNull)
-      .join(broadcast(dim.select(col(dimCol).cast(StringType).as(bucket)).distinct),
-        Seq(bucket), "left_anti")
-      .groupBy(col("part")).agg(sum(col("c")).as("violations"))
-    verdictsFromCounts(totals, vioCounts, rank, s"dataset/referential:$column")
+  /** Verdicts as a pure function of violations, as the reference's result
+    * status is a function of its error list (validator.cr:20-27): violation
+    * rows counted per (part, rank) — `rank` is unique per check,
+    * `constraint_id` need not be — left-joined onto every per-part total
+    * crossed with the static `(rank, constraint_id)` catalog. `part` matches
+    * null-safely (`<=>`), so a NULL-part partition keeps its counts. Both
+    * join sides are aggregated first, so the join is |parts|×|checks|-sized
+    * and `violations` may be any frame of violation rows — the lazy plan, or
+    * the rows a sink wrote and read back. */
+  def verdictsFromViolations(totals: DataFrame, violations: DataFrame,
+                             catalog: Seq[(Int, String)]): DataFrame = {
+    val counts = violations.groupBy(col("part").as("_vp"), col("rank").as("_vr"))
+      .agg(count(lit(1)).as("_vn"))
+    val checks = inline(array(catalog.map { case (rank, id) =>
+      struct(lit(rank).as("rank"), lit(id).as("constraint_id"))
+    }: _*))
+    val n = coalesce(col("_vn"), lit(0L))
+    totals.select(col("part"), col("total"), checks)
+      .join(counts, col("part") <=> col("_vp") && col("rank") === col("_vr"), "left")
+      .select(col("part"), col("rank"), col("constraint_id"), col("total"),
+        n.as("violations"), (n === 0).as("pass"))
   }
-
-  /** Verdict frame derived from a violation frame + per-part totals.
-    * Both sides aggregate before the join, so the join is |parts|-sized. */
-  private[graft] def verdictsFromViolations(totals: DataFrame, violations: DataFrame,
-                                            rank: Int, id: String): DataFrame =
-    verdictsFromCounts(totals,
-      violations.groupBy(col("part")).agg(count(lit(1)).as("violations")), rank, id)
-
-  private def verdictsFromCounts(totals: DataFrame, vioCounts: DataFrame,
-                                 rank: Int, id: String): DataFrame =
-    totals.join(vioCounts, Seq("part"), "left")
-      .select(
-        col("part"), lit(rank).as("rank"), lit(id).as("constraint_id"), col("total"),
-        coalesce(col("violations"), lit(0L)).as("violations"),
-        (coalesce(col("violations"), lit(0L)) === 0).as("pass"))
 }

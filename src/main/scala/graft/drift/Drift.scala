@@ -18,6 +18,12 @@ import graft.run.Validation
   */
 object Drift {
 
+  /** Drift checks rank after the cross-row checks; dimension i gets
+    * `BaseRank + i`. */
+  val BaseRank = 1100
+
+  def id(name: String): String = s"dataset/drift:$name"
+
   /** Per-(part, bucket) counts for an arbitrary bucketing expression. */
   def histogram(df: DataFrame, bucket: Column, part: String = "part"): DataFrame =
     df.groupBy(col(part).as("part"), bucket.cast(StringType).as("bucket"))
@@ -86,15 +92,15 @@ object Drift {
     * actually share one materialization (see `cube`). */
   def multiValidation(df: DataFrame, dims: Seq[(String, Column, Double)],
                       part: String = "part", smoothing: Double = 0.5,
-                      baseRank: Int = 1100): Seq[Validation] =
+                      baseRank: Int = BaseRank): Seq[Validation] =
     multiValidationFromCube(cube(df, dims, part).localCheckpoint(false),
       dims, smoothing, baseRank)
 
   /** Drift checks over a prebuilt `cube` frame (shared with other
-    * consumers, e.g. `Suite`'s verdict totals). */
+    * consumers, e.g. `Suite`'s per-part totals). */
   def multiValidationFromCube(cube: DataFrame, dims: Seq[(String, Column, Double)],
                               smoothing: Double = 0.5,
-                              baseRank: Int = 1100): Seq[Validation] =
+                              baseRank: Int = BaseRank): Seq[Validation] =
     dims.zipWithIndex.map { case ((name, _, threshold), i) =>
       val h = cube.groupBy(col("part"), col(s"_b$i").as("bucket")).agg(sum(col("c")).as("c"))
       validationFromDivergence(divergenceFromHistogram(h, smoothing), name,
@@ -105,24 +111,24 @@ object Drift {
     * divergence value rides in `observed` of a per-partition violation row. */
   def validation(df: DataFrame, bucket: Column, name: String,
                  klThreshold: Double, part: String = "part",
-                 smoothing: Double = 0.5, rank: Int = 1100): Validation =
+                 smoothing: Double = 0.5, rank: Int = BaseRank): Validation =
     validationFromDivergence(divergence(df, bucket, part, smoothing), name,
       klThreshold, rank)
 
   private def validationFromDivergence(div: DataFrame, name: String,
                                        klThreshold: Double, rank: Int): Validation = {
-    val id = s"dataset/drift:$name"
+    val cid = id(name)
     val message = s"""Expected "$name" distribution to stay within KL $klThreshold of the global mix"""
 
     val verdicts = div.select(
-      col("part"), lit(rank).as("rank"), lit(id).as("constraint_id"),
+      col("part"), lit(rank).as("rank"), lit(cid).as("constraint_id"),
       col("total"),
       when(col("kl") <= klThreshold, 0L).otherwise(1L).as("violations"),
       (col("kl") <= klThreshold).as("pass"))
 
     val violations = div.where(col("kl") > klThreshold).select(
       col("part"), col("part").as("doc_id"), lit(rank).as("rank"),
-      lit(id).as("constraint_id"), lit(".").as("path"),
+      lit(cid).as("constraint_id"), lit(".").as("path"),
       format_string("kl=%.6f psi=%.6f", col("kl"), col("psi")).as("observed"),
       lit(message).as("message"))
 

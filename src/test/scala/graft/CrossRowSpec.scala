@@ -56,6 +56,18 @@ class CrossRowSpec extends AnyFunSuite {
     assert(dups == dups2)
   }
 
+  test("NULL keys never collide: duplicateKeys and uniqueness both ignore them") {
+    val df = seqs.withColumn("doc_id",
+      when(col("doc_id").isin("doc-000000000999", "doc-000000000100", "doc-000000000101"),
+        lit(null).cast("string")).otherwise(col("doc_id")))
+    assert(df.where(col("doc_id").isNull).count() > 1)
+    val dups = CrossRow.duplicateKeys(df, "doc_id").collect().map(_.getString(0)).toSet
+    assert(!dups.contains(null), s"a NULL key was reported as duplicated: $dups")
+    val flagged = CrossRow.uniqueness(df, "doc_id", "part").violations
+    assert(flagged.where(col("doc_id").isNull).count() == 0)
+    assert(flagged.select("doc_id").distinct().collect().map(_.getString(0)).toSet == dups)
+  }
+
   test("uniqueness validation counts every row of a duplicated key as violating") {
     val v = CrossRow.uniqueness(seqs, "doc_id", "part")
     val perPart = v.verdicts.collect().map(r => r.getString(0) -> r.getLong(4)).toMap
@@ -86,24 +98,49 @@ class CrossRowSpec extends AnyFunSuite {
     assert(b.violations.count() == seqs.where(col("source") === "spam").count())
   }
 
-  test("referential verdicts from the drift cube equal row-level verdicts") {
-    // Suite derives referential verdict COUNTS from the histogram cube
-    // (source = dim _b1) so the verdicts action needs no row-level scan —
-    // the counts must be indistinguishable from the row-level derivation,
-    // including null-FK exclusion and zero-violation parts
-    val totals = CrossRow.partTotals(seqs)
-    val row = CrossRow.referential(seqs, "source", dim, "source",
-      totals = Some(totals)).verdicts
-    val cube = Drift.cube(seqs, Seq(
-      ("n_tok", Drift.widthBucket(col("n_tok"), 8.0), 0.05),
-      ("source", col("source"), 0.05)))
-    val cubed = CrossRow.referentialVerdictsFromCube(cube, "_b1", dim, "source",
-      totals, "source")
+  test("suite FK verdicts derived from violations equal CrossRow.referential verdicts") {
+    // Suite runs the FK check inside the row pass and derives its verdicts
+    // from the violation rows; the counts must be indistinguishable from the
+    // standalone check's, including null-FK exclusion and zero-violation parts
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
-    assert(rows(row) == rows(cubed))
-    assert(cubed.agg(sum(col("violations"))).collect()(0).getLong(0) ==
+    val derived = Suite.validateSequences(seqs, dim).verdicts
+      .where(col("rank") === CrossRow.BaseRank + 1)
+    assert(rows(derived) == rows(CrossRow.referential(seqs, "source", dim, "source").verdicts))
+    assert(derived.agg(sum(col("violations"))).collect()(0).getLong(0) ==
       seqs.where(col("source") === "spam").count())
+  }
+
+  test("a NULL part keeps its counts: every verdict equals its partition's violation rows") {
+    // p003 becomes the NULL partition, with a duplicated doc_id, an orphan
+    // source and a row-rule break planted in it
+    val planted = seqs.where(col("part") === "p001").limit(3)
+      .withColumn("doc_id", lit("doc-000000000500"))
+      .withColumn("source", lit("nowhere"))
+      .withColumn("n_tok", lit(0).cast(seqs.schema("n_tok").dataType))
+    val df = seqs.unionByName(planted.withColumn("part", lit("p003")))
+      .withColumn("part", when(col("part") =!= "p003", col("part")))
+    val v = Suite.validateSequences(df, dim)
+    val counts = v.violations.groupBy("part", "rank").count().collect()
+      .map(r => (Option(r.getString(0)), r.getInt(1)) -> r.getLong(2)).toMap
+    val verdicts = v.verdicts.collect()
+    for (id <- Seq("dataset/unique:doc_id", "dataset/referential:source", ".n_tok/minimum"))
+      assert(verdicts.exists(r => r.isNullAt(0) && r.getString(2) == id && r.getLong(4) > 0),
+        s"NULL partition lost its $id violations")
+    verdicts.foreach { r =>
+      val key = (Option(r.getString(0)), r.getInt(1))
+      assert(r.getLong(4) == counts.getOrElse(key, 0L), s"verdict $r vs violation rows")
+      assert(r.getBoolean(5) == (r.getLong(4) == 0))
+    }
+    assert(verdicts.filter(_.isNullAt(0)).map(_.getLong(3)).toSet ==
+      Set(df.where(col("part").isNull).count()))
+    // the standalone cross-row checks agree on the NULL partition
+    val uniq = CrossRow.uniqueness(df, "doc_id", "part")
+    val ref = CrossRow.referential(df, "source", dim, "source")
+    for (c <- Seq(uniq, ref)) {
+      val n = c.verdicts.where(col("part").isNull).collect()
+      assert(n.length == 1 && n.head.getLong(4) == c.violations.where(col("part").isNull).count())
+    }
   }
 
   test("consistency check flags n_tok != size(tokens) rows in the row pass") {
