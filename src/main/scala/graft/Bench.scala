@@ -3,11 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Round benchmark (driver contract): the headline metric — validated
-  * sequences/sec for the full constraint suite (row checks + dedup +
-  * referential + drift) over the deterministic generated sequence table
-  * (BASELINE.json `metric`) — plus per-query seconds of the driver-query
-  * battery. The last stdout line is a compact JSON summary (headline, suite
+/** Round benchmark: the headline metric — validated sequences/sec for the
+  * full constraint suite (row checks + dedup + referential + drift) over the
+  * deterministic generated sequence table (BASELINE.json `metric`) — plus
+  * per-query seconds of the `SparkEntry.queries` battery. The last stdout line is a compact JSON summary (headline, suite
   * wall time, failed queries, the scaling pair with its per-rep arrays);
   * the per-query map goes only to `bench_result.json`. A battery query
   * that throws is listed under `failed` with no timing, and the exit code
