@@ -6,11 +6,11 @@ import org.apache.spark.sql.functions._
 /** Round benchmark: the headline metric — validated sequences/sec for the
   * full constraint suite (row checks + dedup + referential + drift) over the
   * deterministic generated sequence table (BASELINE.json `metric`) — plus
-  * per-query seconds of the `SparkEntry.queries` battery. The last stdout line is a compact JSON summary (headline, suite
-  * wall time, failed queries, the scaling pair with its per-rep arrays);
-  * the per-query map goes only to `bench_result.json`. A battery query
-  * that throws is listed under `failed` with no timing, and the exit code
-  * is 1.
+  * per-query seconds of the `SparkEntry.queries` battery. The last stdout
+  * line is a compact JSON summary (headline, suite wall time, failed
+  * queries, the scaling pair with its per-rep arrays); the per-query map
+  * goes only to `bench_result.json`. A battery query that throws is listed
+  * under `failed` with no timing, and the exit code is 1.
   *
   * Protocol (unified with BENCH_SCALING.md in r2 — VERDICT r1 #6): the
   * suite number is the MINIMUM of `reps` interleaved runs (this VM's wall
