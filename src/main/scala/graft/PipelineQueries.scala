@@ -772,7 +772,8 @@ object PipelineQueries {
          grid AS (SELECT t.part, t.t, b.bucket, b.bc, bt.bt, bt.k,
                          coalesce(h.c, 0) AS c
                   FROM t CROSS JOIN b CROSS JOIN bt
-                  LEFT JOIN h ON h.part = t.part AND h.bucket = b.bucket),
+                  LEFT JOIN h ON h.part IS NOT DISTINCT FROM t.part
+                                AND h.bucket = b.bucket),
          pq AS (SELECT part, t, (c + 0.5) / (t + 0.5 * k) AS p,
                        (bc + 0.5) / (bt + 0.5 * k) AS q FROM grid)
          SELECT part, round(sum(p * ln(p / q)), 3) AS kl,

@@ -29,14 +29,15 @@ import graft.stats.MetricsStore
   * marked complete — Suite.resumableRun's ordering contract).
   *
   * One run: the stats sketches are computed and checkpointed (their
-  * emptiness is the resume check); the violations are written — the one
-  * full-width scan of the input, with uniqueness candidates and the drift
-  * cube materializing into checkpoints on the way; the verdicts are derived
-  * from this run's written violations plus the cube's per-part totals and
-  * written, while an `Observation` on that write counts the failing
-  * verdicts for the exit code; the stats are appended to the store. No
-  * action after the violations write reads the input, and nothing reads
-  * `verdicts/` back.
+  * emptiness is the resume check); the drift cube is collected (a narrow
+  * scan) and the drift checks and per-part totals are computed from it on
+  * the driver; the violations are written — the one full-width scan of the
+  * input, with the uniqueness candidates materializing into a checkpoint on
+  * the way; the verdicts are derived from this run's written violations plus
+  * the cube's per-part totals and written, while an `Observation` on that
+  * write counts the failing verdicts for the exit code; the stats are
+  * appended to the store. No action after the violations write reads the
+  * input, and nothing reads `verdicts/` back.
   *
   * Exit code: 0 = all constraints passed (or nothing left to validate),
   * 1 = violations found, 2 = bad usage.

@@ -117,8 +117,8 @@ object SuiteQueries {
                FROM events)))),
        seq AS (SELECT * FROM seq_all WHERE $pred)"""
 
-  /** Smoothed-KL divergence per part (mirrors Drift.divergenceFromHistogram
-    * with smoothing 0.5, including its null-bucket join semantics). */
+  /** Smoothed-KL divergence per part (mirrors Drift.divergences with
+    * smoothing 0.5: parts match null-safely, a NULL bucket never matches). */
   private def klSql(hist: String, name: String): String =
     s"""${name}_t AS (SELECT part, sum(c) AS t FROM $hist GROUP BY 1),
         ${name}_b AS (SELECT bucket, sum(c) AS bc FROM $hist GROUP BY 1),
@@ -128,7 +128,7 @@ object SuiteQueries {
             SELECT t.part, t.t, (coalesce(h.c, 0) + 0.5) / (t.t + 0.5 * bt.k) AS p,
                    (b.bc + 0.5) / (bt.bt + 0.5 * bt.k) AS q
             FROM ${name}_t t CROSS JOIN ${name}_b b CROSS JOIN ${name}_bt bt
-            LEFT JOIN $hist h ON h.part = t.part AND h.bucket = b.bucket)
+            LEFT JOIN $hist h ON h.part IS NOT DISTINCT FROM t.part AND h.bucket = b.bucket)
           GROUP BY part)"""
 
   private val verdictIds = Seq(

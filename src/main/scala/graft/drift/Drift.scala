@@ -1,6 +1,8 @@
 package graft.drift
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -9,12 +11,16 @@ import graft.run.Validation
 /** Distribution-drift checks: KL divergence and PSI of a bucketed column's
   * per-partition histogram against the global (all-partition) histogram.
   *
-  * Pure DataFrame algebra (SURVEY.md §2.8): one `groupBy(part, bucket)`
-  * shuffle over the data, then all joins/sums happen on histogram-sized
-  * frames (|parts| × |buckets| rows), independent of table size. No UDAF.
+  * One `groupBy(part, bucket…)` over the data (`cube`) is collected; the
+  * divergence math then runs on the driver over the collected
+  * |parts| × Π|bucketsᵢ| cells (SURVEY.md §7.1 step 6), and its results come
+  * back as local frames, so no consumer pays a Spark stage for them.
   *
-  * KL(p‖q) = Σ p·ln(p/q), PSI = Σ (p−q)·ln(p/q), with Laplace smoothing so
-  * empty buckets never divide by zero.
+  * With ε = 0.5, k buckets (a NULL bucket counts as its own global bucket),
+  * part total t, cell count c, global bucket count bc and global total bt:
+  * p = (c+ε)/(t+ε·k), q = (bc+ε)/(bt+ε·k), KL = Σ p·ln(p/q) and
+  * PSI = Σ (p−q)·ln(p/q). Cells are keyed null-safely on `part`; a NULL
+  * bucket's cell never matches a partition (c = 0).
   */
 object Drift {
 
@@ -24,57 +30,14 @@ object Drift {
 
   def id(name: String): String = s"dataset/drift:$name"
 
-  /** Per-(part, bucket) counts for an arbitrary bucketing expression. */
-  def histogram(df: DataFrame, bucket: Column, part: String = "part"): DataFrame =
-    df.groupBy(col(part).as("part"), bucket.cast(StringType).as("bucket"))
-      .agg(count(lit(1)).as("c"))
-
   /** Fixed-width numeric bucketing. */
   def widthBucket(c: Column, width: Double): Column =
     floor(c.cast(DoubleType) / width).cast(LongType)
 
-  /** (part, kl, psi, total) — drift of each partition vs the global mix. */
-  def divergence(df: DataFrame, bucket: Column, part: String = "part",
-                 smoothing: Double = 0.5): DataFrame =
-    divergenceFromHistogram(histogram(df, bucket, part), smoothing)
-
-  /** Divergence math over a prebuilt (part, bucket, c) histogram — all
-    * frames histogram-sized. */
-  def divergenceFromHistogram(h: DataFrame, smoothing: Double = 0.5): DataFrame = {
-    val totals = h.groupBy(col("part")).agg(sum(col("c")).as("t"))
-    val base = h.groupBy(col("bucket")).agg(sum(col("c")).as("bc"))
-    val baseTotal = base.agg(sum(col("bc")).as("bt"), count(lit(1)).as("k"))
-
-    // grid = every (part × bucket) pair, so buckets absent from a partition
-    // still contribute (smoothed) mass — all frames here are histogram-sized
-    val grid = totals.crossJoin(base).crossJoin(baseTotal)
-      .join(h, Seq("part", "bucket"), "left")
-      .withColumn("c", coalesce(col("c"), lit(0L)))
-    val eps = lit(smoothing)
-    val p = (col("c") + eps) / (col("t") + eps * col("k"))
-    val q = (col("bc") + eps) / (col("bt") + eps * col("k"))
-    val ratio = log(p / q)
-    grid.groupBy(col("part"))
-      .agg(
-        sum(p * ratio).as("kl"),
-        sum((p - q) * ratio).as("psi"),
-        first(col("t")).as("total"))
-  }
-
   /** The multi-dimension histogram cube: `(part, _b0 … _bn, c)` — one
-    * `groupBy(part, b1, …, bn)` over the data (cardinality =
-    * Π bucket-counts × parts, still histogram-sized). Every per-dimension
-    * histogram AND the per-part row totals are re-aggregations of this one
-    * frame.
-    *
-    * Consumers should share it through `.localCheckpoint(false)` (as
-    * `Suite`/`multiValidation` do): ReuseExchange does NOT collapse the
-    * consumers' differently-pruned copies — measured on the suite verdicts
-    * final plan, the un-checkpointed cube's scan executed 3× (once per
-    * drift dimension + once column-pruned to `part` for the totals, which
-    * the optimizer rewrites into a direct scan) — whereas the checkpointed
-    * cube is materialized once and every consumer re-reads the tiny
-    * histogram-sized frame. */
+    * `groupBy(part, b1, …, bn)` over the data, |parts| × Π|bucketsᵢ| rows
+    * at most. Every dimension's histogram and the per-part row totals are
+    * re-aggregations of it (`divergences`). */
   def cube(df: DataFrame, dims: Seq[(String, Column, Double)],
            part: String = "part"): DataFrame = {
     val keys = col(part).as("part") +:
@@ -82,30 +45,56 @@ object Drift {
     df.groupBy(keys: _*).agg(count(lit(1)).as("c"))
   }
 
-  /** Per-part row totals re-aggregated from the cube — zero additional
-    * scans next to any other cube consumer (exchange reuse). */
-  def totalsFromCube(cube: DataFrame): DataFrame =
-    cube.groupBy(col("part")).agg(sum(col("c")).as("total"))
+  /** Collects the `cube` of `dims` — the one Spark job — and computes on
+    * the driver each dimension's per-part divergence `(part, kl, psi, total)`
+    * and the per-part row totals `(part, total)`, all as local frames. The
+    * driver holds the collected |parts| × Π|bucketsᵢ| cube rows, however
+    * many rows `df` has. */
+  def divergences(df: DataFrame, dims: Seq[(String, Column, Double)],
+                  part: String = "part",
+                  smoothing: Double = 0.5): (Seq[DataFrame], DataFrame) = {
+    val cubed = cube(df, dims, part)
+    val rows = cubed.collect().toSeq
+    def local(rs: Seq[Row], fields: StructField*) =
+      df.sparkSession.createDataFrame(rs.asJava, StructType(cubed.schema("part") +: fields))
 
-  /** SINGLE-SCAN multi-dimension drift: n drift checks for the scan+shuffle
-    * price of one — the cube is lazily checkpointed so the dimensions
-    * actually share one materialization (see `cube`). */
-  def multiValidation(df: DataFrame, dims: Seq[(String, Column, Double)],
-                      part: String = "part", smoothing: Double = 0.5,
-                      baseRank: Int = BaseRank): Seq[Validation] =
-    multiValidationFromCube(cube(df, dims, part).localCheckpoint(false),
-      dims, smoothing, baseRank)
-
-  /** Drift checks over a prebuilt `cube` frame (shared with other
-    * consumers, e.g. `Suite`'s per-part totals). */
-  def multiValidationFromCube(cube: DataFrame, dims: Seq[(String, Column, Double)],
-                              smoothing: Double = 0.5,
-                              baseRank: Int = BaseRank): Seq[Validation] =
-    dims.zipWithIndex.map { case ((name, _, threshold), i) =>
-      val h = cube.groupBy(col("part"), col(s"_b$i").as("bucket")).agg(sum(col("c")).as("c"))
-      validationFromDivergence(divergenceFromHistogram(h, smoothing), name,
-        threshold, baseRank + i)
+    val cellCount = (r: Row) => r.getLong(dims.size + 1)
+    val totals = rows.groupMapReduce(_.get(0))(cellCount)(_ + _).toSeq
+    val divs = dims.indices.map { i =>
+      val bucket = (r: Row) => r.getString(i + 1)
+      val cells = rows.groupMapReduce(r => (r.get(0), bucket(r)))(cellCount)(_ + _)
+      val base = rows.groupMapReduce(bucket)(cellCount)(_ + _)
+      val k = base.size.toDouble
+      val bt = base.values.sum.toDouble
+      local(totals.map { case (p, t) =>
+        var kl, psi = 0.0
+        for ((b, bc) <- base) {
+          val c = if (b == null) 0L else cells.getOrElse((p, b), 0L)
+          val pp = (c + smoothing) / (t + smoothing * k)
+          val q = (bc + smoothing) / (bt + smoothing * k)
+          val ratio = math.log(pp / q)
+          kl += pp * ratio
+          psi += (pp - q) * ratio
+        }
+        Row(p, kl, psi, t)
+      }, StructField("kl", DoubleType), StructField("psi", DoubleType),
+        StructField("total", LongType))
     }
+    (divs, local(totals.map { case (p, t) => Row(p, t) }, StructField("total", LongType)))
+  }
+
+  /** The drift check of each dimension (rank `baseRank + i`) over its
+    * `divergences` frame. */
+  def validations(divs: Seq[DataFrame], dims: Seq[(String, Column, Double)],
+                  baseRank: Int = BaseRank): Seq[Validation] =
+    divs.zip(dims).zipWithIndex.map { case ((div, (name, _, threshold)), i) =>
+      validationFromDivergence(div, name, threshold, baseRank + i)
+    }
+
+  /** (part, kl, psi, total) — drift of each partition vs the global mix. */
+  def divergence(df: DataFrame, bucket: Column, part: String = "part",
+                 smoothing: Double = 0.5): DataFrame =
+    divergences(df, Seq(("", bucket, 0.0)), part, smoothing)._1.head
 
   /** Verdict-shaped drift check: pass iff KL ≤ threshold. The partition's
     * divergence value rides in `observed` of a per-partition violation row. */

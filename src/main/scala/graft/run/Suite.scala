@@ -23,24 +23,24 @@ import graft.stats.{Metrics, ValidationStateStore}
   *      scan as a broadcast left-outer match against the distinct dim keys
   *   2. uniqueness — (doc_id, part) only: hash detection + candidate fetch
   *      (two scans, 8 B/row exchange; see CrossRow.uniqueness)
-  *   3. drift histograms — (n_tok, source, part) only, ONE shared cube
-  *      scan + |parts×buckets| shuffle: the histogram-sized cube is lazily
-  *      checkpointed and both dimensions AND the per-part verdict totals
-  *      re-read the materialized frame, costing no scan of their own
+  *   3. drift histograms — (n_tok, source, part) only: ONE cube
+  *      `groupBy(part, buckets…)` collected by `plan`, its one action; both
+  *      dimensions' divergences and the per-part verdict totals are computed
+  *      from it on the driver and ride as local frames, costing no stage
   *   Verdicts count the violation rows per (part, rank) and join them onto
   *   the cube's totals × the static constraint catalog: forcing the verdicts
-  *   of the lazy plan reads the table once (row pass; 2 and 3 ride their
-  *   checkpoints), and a sink that derives them from the violations it wrote
-  *   reads no table at all.
+  *   of the planned frames reads the table once (row pass; uniqueness rides
+  *   its checkpoint), and a sink that derives them from the violations it
+  *   wrote reads no table at all.
   *
-  * Fault-tolerance note: the shared frames (uniqueness candidates, drift
-  * cube) are `localCheckpoint`ed — blocks live on executors, so losing one
-  * mid-job fails the job instead of recomputing from lineage. That is the
-  * deliberate trade here: the engine's recovery unit is the RESUMABLE RUN
-  * (`resumableRun` skips already-validated partitions on restart), not RDD
-  * lineage replay, and the checkpointed frames are dup-set/histogram-sized
-  * (cheap to redo), while keeping their lineage would re-execute the
-  * detection pipeline from the source scan on EVERY action, every run.
+  * Fault-tolerance note: the uniqueness candidates are `localCheckpoint`ed —
+  * blocks live on executors, so losing one mid-job fails the job instead of
+  * recomputing from lineage. That is the deliberate trade here: the engine's
+  * recovery unit is the RESUMABLE RUN (`resumableRun` skips
+  * already-validated partitions on restart), not RDD lineage replay, and the
+  * checkpointed frame is dup-set-sized (cheap to redo), while keeping its
+  * lineage would re-execute the detection pipeline from the source scan on
+  * EVERY action, every run. The drift results live on the driver.
   */
 object Suite {
 
@@ -60,6 +60,8 @@ object Suite {
     def validation: Validation = Validation(verdictsOf(violations), violations)
   }
 
+  /** Plans the suite over `df`. Runs one Spark action, the drift cube
+    * collect; every other frame stays lazy. */
   def plan(df: DataFrame, dim: DataFrame,
            spec: Spec = SpecParser.parse(SequenceGen.SeqSpecJson),
            cfg: Config = Config()): Planned = {
@@ -72,19 +74,16 @@ object Suite {
     val (marked, fk) = CrossRow.referentialCheck(df, cfg.source, dim, cfg.source)
     val checks = Compiler.compile(spec, df.schema) :+ consistency :+ fk
 
-    // both drift dimensions share ONE scan via the multi-bucket cube, and
-    // the per-part totals are a re-aggregation of the SAME cube; lazily
-    // checkpointed because ReuseExchange does not collapse the consumers'
-    // differently-pruned copies of the cube (see Drift.cube scaladoc)
+    // both drift dimensions and the per-part totals come from ONE collected
+    // cube, computed on the driver (see Drift.divergences)
     val dims = Seq(
       (cfg.nTok, Drift.widthBucket(col(cfg.nTok), cfg.nTokBucketWidth), cfg.klThreshold),
       (cfg.source, col(cfg.source), cfg.klThreshold))
-    val cube = Drift.cube(df, dims, cfg.part).localCheckpoint(false)
-    val totals = Drift.totalsFromCube(cube)
+    val (divs, totals) = Drift.divergences(df, dims, cfg.part)
 
     val row = Validator.violationFrame(marked, checks, col(cfg.docId), col(cfg.part))
     val uniq = CrossRow.uniqueness(df, cfg.docId, cfg.part)
-    val drifts = Drift.multiValidationFromCube(cube, dims)
+    val drifts = Drift.validations(divs, dims)
     val catalog = checks.map(c => c.rank -> c.id) ++
       Seq(CrossRow.BaseRank -> CrossRow.uniqueId(cfg.docId)) ++
       dims.indices.map(i => (Drift.BaseRank + i) -> Drift.id(dims(i)._1))
@@ -112,8 +111,8 @@ object Suite {
     *
     * The stats sketches are computed (and checkpointed) FIRST: their
     * emptiness is the resume check, so no separate probe scans the input,
-    * and every action after the sink reads only what the run wrote or
-    * checkpointed. */
+    * and a fully checkpointed run never reaches `plan`'s cube collect. Every
+    * action after the sink reads only what the run wrote or checkpointed. */
   def resumableRun(df: DataFrame, dim: DataFrame, store: ValidationStateStore,
                    spec: Spec = SpecParser.parse(SequenceGen.SeqSpecJson),
                    cfg: Config = Config(),

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -166,6 +167,72 @@ class CrossRowSpec extends AnyFunSuite {
     val failing = v.verdicts.where(!col("pass")).select("part").collect().map(_.getString(0))
     assert(failing.toSeq == Seq("p000"))
     assert(v.violations.count() == 1)
+  }
+
+  test("drift: relabeling a partition to NULL leaves its kl, psi and total unchanged") {
+    val nulled = seqs.withColumn("part", when(col("part") =!= "p000", col("part")))
+    for (b <- Seq(Drift.widthBucket(col("n_tok"), 8.0), col("source"))) {
+      def div(df: DataFrame) = Drift.divergence(df, b).collect()
+        .map(r => Option(r.getString(0)) -> ((r.getDouble(1), r.getDouble(2), r.getLong(3)))).toMap
+      val before = div(seqs)
+      assert(div(nulled) == before.map { case (p, v) => p.filter(_ != "p000") -> v })
+    }
+    // nor do the suite's drift verdicts and violation rows for it
+    def driftRows(df: DataFrame) = {
+      val v = Suite.validateSequences(df, dim)
+      Seq(v.verdicts, v.violations.drop("doc_id")).map(_.where(col("rank") >= Drift.BaseRank)
+        .withColumn("part", coalesce(col("part"), lit("p000")))
+        .collect().map(_.toString).sorted.toSeq)
+    }
+    val rows = driftRows(seqs)
+    assert(rows(1).exists(_.startsWith("[p000,")), s"p000 has no drift violation: $rows")
+    assert(driftRows(nulled) == rows)
+  }
+
+  test("driver-side drift math agrees with an independent SQL grid") {
+    // a NULL part, a one-row partition (missing almost every bucket) and
+    // the NULL source bucket the generator injects
+    val oneRow = seqs.where(col("source") === "books").orderBy("doc_id", "n_tok").limit(1)
+      .withColumn("part", lit("p9"))
+    val df = seqs.unionByName(oneRow).withColumn("part", when(col("part") =!= "p003", col("part")))
+    assert(df.where(col("source").isNull).count() > 0)
+    df.createOrReplaceTempView("drift_grid_input")
+    val dims = Seq(
+      (Drift.widthBucket(col("n_tok"), 8.0), "CAST(floor(CAST(n_tok AS DOUBLE) / 8.0D) AS BIGINT)"),
+      (col("source"), "source"))
+    for ((bucket, bucketSql) <- dims) {
+      val expected = spark.sql(s"""
+        WITH h AS (SELECT part, CAST($bucketSql AS STRING) AS bucket, count(*) AS c
+                   FROM drift_grid_input GROUP BY 1, 2),
+             t AS (SELECT part, sum(c) AS t FROM h GROUP BY part),
+             b AS (SELECT bucket, sum(c) AS bc FROM h GROUP BY bucket),
+             bt AS (SELECT sum(bc) AS bt, count(*) AS k FROM b),
+             pq AS (SELECT t.part, t.t, (coalesce(h.c, 0) + 0.5D) / (t.t + 0.5D * bt.k) AS p,
+                           (b.bc + 0.5D) / (bt.bt + 0.5D * bt.k) AS q
+                    FROM t CROSS JOIN b CROSS JOIN bt
+                    LEFT JOIN h ON h.part IS NOT DISTINCT FROM t.part AND h.bucket = b.bucket)
+        SELECT part, sum(p * ln(p / q)) AS kl, sum((p - q) * ln(p / q)) AS psi,
+               max(t) AS total
+        FROM pq GROUP BY part""")
+      def byPart(f: DataFrame) = f.select("part", "kl", "psi", "total").collect()
+        .map(r => Option(r.getString(0)) -> ((r.getDouble(1), r.getDouble(2), r.getLong(3)))).toMap
+      val got = byPart(Drift.divergence(df, bucket))
+      val want = byPart(expected)
+      assert(got.keySet == want.keySet && got.keySet.contains(None) && got.keySet.contains(Some("p9")))
+      for ((p, (kl, psi, total)) <- want) {
+        val (gkl, gpsi, gtotal) = got(p)
+        assert(math.abs(gkl - kl) <= 1e-12 && math.abs(gpsi - psi) <= 1e-12 && gtotal == total,
+          s"part $p: driver ($gkl, $gpsi, $gtotal) vs SQL ($kl, $psi, $total)")
+      }
+    }
+    // the suite's two-dimension drift verdicts equal the one-dimension checks
+    def rows(f: DataFrame) = f.collect().map(_.toString).sorted.toSeq
+    val suite = Suite.validateSequences(df, dim).verdicts.where(col("rank") >= Drift.BaseRank)
+    val single = dims.zipWithIndex.map { case ((bucket, _), i) =>
+      Drift.validation(df, bucket, Seq("n_tok", "source")(i), 0.05, rank = Drift.BaseRank + i)
+        .verdicts
+    }.reduce(_ unionByName _)
+    assert(rows(suite) == rows(single))
   }
 
   test("full suite unions row + cross-row + drift verdicts") {

@@ -295,7 +295,8 @@ class DifferentialFuzzSpec extends AnyFunSuite {
     // fixed seed: the trial corpus is part of the test contract. The env
     // knobs support one-off deep soaks (e.g. GRAFT_FUZZ_TRIALS=500) without
     // changing what CI runs; a non-default seed explores fresh corpora.
-    val seed = sys.env.get("GRAFT_FUZZ_SEED").map(_.toLong).getOrElse(0x5EED5L)
+    val seed = sys.env.get("GRAFT_FUZZ_SEED").map(java.lang.Long.decode(_).longValue)
+      .getOrElse(0x5EED5L)
     val rnd = new Random(seed)
     val trials = sys.env.getOrElse("GRAFT_FUZZ_TRIALS", "48").toInt
     val rowsPerTrial = sys.env.getOrElse("GRAFT_FUZZ_ROWS", "80").toInt
@@ -384,7 +385,8 @@ class DifferentialFuzzSpec extends AnyFunSuite {
     }
 
   test("root-value mode: typed and variant compilers agree on random values") {
-    val rnd = new Random(sys.env.get("GRAFT_FUZZ_SEED").map(_.toLong ^ 0x0057EEDL)
+    val rnd = new Random(sys.env.get("GRAFT_FUZZ_SEED")
+      .map(java.lang.Long.decode(_).longValue ^ 0x0057EEDL)
       .getOrElse(0x0057EEDL))
     val cases: Vector[(DataType, Random => String)] = Vector(
       (IntegerType, numSchema _),

@@ -21,7 +21,10 @@ import Harness._
 class FormatBoundarySpec extends AnyFunSuite {
 
   private val hostLabel64 = "a" * 64 + ".com"
-  private val hostTotal256 = Seq.fill(5)("a" * 63).mkString(".") // 319 chars > 255
+  // 256 and 255 characters in labels of at most 63: only the total-length
+  // bound tells them apart
+  private val hostTotal256 = (Seq.fill(3)("a" * 63) ++ Seq("a" * 62, "a")).mkString(".")
+  private val hostTotal255 = hostTotal256.drop(1)
 
   private val accept: Map[String, Seq[String]] = Map(
     "date" -> Seq("2023-04-05", "2023-00-15", "2023-04-31", "2023-12-31"),
@@ -31,7 +34,7 @@ class FormatBoundarySpec extends AnyFunSuite {
     "duration" -> Seq("P3Y6M4DT12H30M5S", "P4W", "PT1S", "P1D"),
     "email" -> Seq("a@b.co", "A.B@EXAMPLE.COM", "a+tag@sub.example.com"),
     "hostname" -> Seq("example.com", "example.com.", "localhost",
-      "xn--d1acufc.xn--p1ai"),
+      "xn--d1acufc.xn--p1ai", hostTotal255),
     "ipv4" -> Seq("0.0.0.0", "255.255.255.255", "192.168.0.1"),
     "ipv6" -> Seq("::", "::1", "2001:db8::1", "2001:DB8::1", "0:0:0:0:0:0:0:1"),
     "uuid" -> Seq("123e4567-e89b-12d3-a456-426614174000",
@@ -59,6 +62,8 @@ class FormatBoundarySpec extends AnyFunSuite {
     "relative-json-pointer" -> Seq("x/foo", "#", "-1/a"))
 
   test("driver-side matcher: accept/reject boundary vectors cover all 12 formats") {
+    assert(hostTotal256.length == 256 && hostTotal255.length == 255)
+    assert(hostTotal256.split('.').forall(_.length <= 63))
     assert(accept.keySet == Formats.regexes.keySet)
     assert(reject.keySet == Formats.regexes.keySet)
     for ((f, vs) <- accept; v <- vs)
@@ -70,14 +75,9 @@ class FormatBoundarySpec extends AnyFunSuite {
   test("column path agrees with the driver-side matcher on every boundary vector") {
     // the compiled rlike check and propertyNames' driver-side matcher read
     // the same table; this pins that they decide every vector identically
-    // (newline-free vectors — the one semantic gap is pinned below)
-    import spark.implicits._
     for (f <- Formats.regexes.keys) {
       val vs = accept(f) ++ reject(f)
-      val df = vs.zipWithIndex.map { case (v, i) => (f"d$i%03d", v) }.toDF("doc_id", "v")
-      val spec = SpecParser.parse(s"""{"type":"string","format":"$f"}""")
-      val violating = Validator.validateColumn(df, spec, "v", "doc_id", None)
-        .violations.select("doc_id").distinct().collect().map(_.getString(0)).toSet
+      val violating = columnViolations(f, vs)
       val expected = vs.zipWithIndex.collect {
         case (v, i) if !Formats.matches(f, v) => f"d$i%03d"
       }.toSet
@@ -87,15 +87,24 @@ class FormatBoundarySpec extends AnyFunSuite {
     }
   }
 
-  test("known corner: anchored rlike (find) accepts a trailing newline the driver full-match rejects") {
-    // The column check is `v.rlike("^...$")` — java find() semantics, where
-    // `$` also matches before a final line terminator — while propertyNames'
-    // driver-side check is java matches() (whole string). The regexes are
-    // all ^...$-anchored so the two agree on every newline-free string; a
-    // value with a trailing '\n' is the one documented divergence.
-    val u = "123e4567-e89b-12d3-a456-426614174000"
-    assert(!Formats.matches("uuid", u + "\n"))
-    assert(errorsForValue("""{"type":"string","format":"uuid"}""",
-      s"'$u' || char(10)").isEmpty)
+  test("a valid value followed by a newline is rejected by both paths") {
+    // `\z` anchors: rlike (find) and the driver's matches() both reject a
+    // trailing line terminator, which `$` would let through find()
+    for (f <- Formats.regexes.keys) {
+      val v = accept(f).head + "\n"
+      assert(!Formats.matches(f, v), s"""format "$f" driver matcher accepts "$v"""")
+      assert(columnViolations(f, Seq(v)) == Set("d000"),
+        s"""format "$f" column path accepts "$v"""")
+    }
+  }
+
+  /** doc_ids (`d000`, `d001`, …, one per value) the compiled column check
+    * flags for `format: f`. */
+  private def columnViolations(f: String, vs: Seq[String]): Set[String] = {
+    import spark.implicits._
+    val df = vs.zipWithIndex.map { case (v, i) => (f"d$i%03d", v) }.toDF("doc_id", "v")
+    val spec = SpecParser.parse(s"""{"type":"string","format":"$f"}""")
+    Validator.validateColumn(df, spec, "v", "doc_id", None)
+      .violations.select("doc_id").distinct().collect().map(_.getString(0)).toSet
   }
 }
