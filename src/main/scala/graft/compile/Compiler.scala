@@ -6,32 +6,15 @@ import org.apache.spark.sql.types._
 
 import graft.spec._
 
-/** One compiled constraint keyword.
-  *
-  * The runtime analog of a single keyword evaluation in the reference's
-  * `Validator#validate` (/root/reference/src/validator.cr) — but evaluated
-  * columnarly: `pass` is a never-null boolean `Column` over the whole
-  * Dataset, `true` when the row passes OR the keyword is not applicable
-  * (value absent / gated out). `rank` encodes the reference's fixed keyword
-  * evaluation order (golden violation order, SURVEY.md §2.3-2.6).
-  */
-final case class CompiledCheck(
-    id: String,
-    path: String,
-    keyword: String,
-    message: String,
-    rank: Int,
-    pass: Column,
-    observed: Column
-)
-
-/** Spec tree → flat ordered `Vector[CompiledCheck]`.
+/** Typed-column compiler: spec → checks over a Dataset's own columns.
   *
   * This is the whole "execution engine" of the reference re-expressed
   * Spark-first: recursion over the validator tree happens ONCE at plan-build
   * time on the driver (like the reference's compile-time `to_cr` codegen,
   * /root/reference/src/render.cr); per-row work is pure Catalyst expressions
   * inside whole-stage codegen. Zero UDFs except the rare `format:"regex"`.
+  * Keyword order, ids, paths and messages come from `KeywordWalk`; this
+  * backend supplies the Columns.
   *
   * Presence semantics: Spark closed schemas make "key absent" ≡ null
   * (documented divergence from JSON's present-null vs absent distinction).
@@ -42,7 +25,7 @@ final case class CompiledCheck(
 object Compiler {
 
   /** Value location: how to reference "the JSON value" as Columns. */
-  sealed trait Loc {
+  private sealed trait Loc {
     def dt: DataType
     def value: Column
     def has(name: String): Boolean = fields.exists(_.name == name)
@@ -52,7 +35,7 @@ object Compiler {
   }
 
   /** The root row of the Dataset. */
-  final case class RootLoc(schema: StructType) extends Loc {
+  private final case class RootLoc(schema: StructType) extends Loc {
     def dt: DataType = schema
     def value: Column = struct(schema.fieldNames.map(col).toIndexedSeq: _*)
     def fieldCol(name: String): Column = col(name)
@@ -60,7 +43,7 @@ object Compiler {
   }
 
   /** A nested value (column, struct field, or lambda variable). */
-  final case class ColLoc(c: Column, dt: DataType) extends Loc {
+  private final case class ColLoc(c: Column, dt: DataType) extends Loc {
     def value: Column = c
     def fieldCol(name: String): Column = c.getField(name)
     def fields: Seq[StructField] = dt match {
@@ -71,8 +54,7 @@ object Compiler {
 
   /** Compile a spec against a whole row (root must be object/generic). */
   def compile(spec: Spec, schema: StructType): Vector[CompiledCheck] = spec match {
-    case _: ObjSpec | _: GenericSpec =>
-      rank(specChecks(spec, RootLoc(schema), ".", ".", lit(true), nullFailsGate = false))
+    case _: ObjSpec | _: GenericSpec => Typed.ranked(spec, RootLoc(schema), ".", nullFailsGate = false)
     case other =>
       throw SpecError(s"root spec over a table must be object or generic, got $other")
   }
@@ -80,27 +62,113 @@ object Compiler {
   /** Compile a spec against one column — the "validate a single value" path
     * (null value fails the type gate, like `as_f` on null in the reference). */
   def compileColumn(spec: Spec, colName: String, dt: DataType): Vector[CompiledCheck] =
-    rank(specChecks(spec, ColLoc(col(colName), dt), ".", "." + colName, lit(true), nullFailsGate = true))
+    Typed.ranked(spec, ColLoc(col(colName), dt), "." + colName, nullFailsGate = true)
 
-  private def rank(cs: Vector[CompiledCheck]): Vector[CompiledCheck] = {
-    val ids = cs.map(_.id)
-    require(ids.distinct.size == ids.size, s"duplicate constraint ids: ${ids.diff(ids.distinct)}")
-    cs.zipWithIndex.map { case (c, i) => c.copy(rank = i) }
-  }
+  private object Typed extends KeywordWalk[Loc] {
+    import KeywordWalk._
 
-  /** Full-validity predicate of `spec` over value `v` — the composite /
-    * array-element collapsed boolean (reference collapses composite child
-    * errors into one, validator.cr:536-544). Never null. */
-  def pred(spec: Spec, v: Column, dt: DataType): Column = spec match {
-    case NullSpec => v.isNull
-    case g: GenericSpec =>
-      conj(specChecks(g, ColLoc(v, dt), ".", ".", lit(true), nullFailsGate = false).map(_.pass))
-    case s =>
-      if (!staticGateOk(s, dt)) lit(false)
-      else {
-        val checks = specChecks(s, ColLoc(v, dt), ".", ".", v.isNotNull, nullFailsGate = false)
-        v.isNotNull && conj(checks.map(_.pass))
+    protected def gate(spec: Spec, n: Loc, nullFailsGate: Boolean): Gate =
+      if (!staticGateOk(spec, n.dt)) GateFail
+      else if (nullFailsGate) GateWhen(n.value.isNotNull)
+      else GatePass
+
+    protected def json(n: Loc): Column = n.dt match {
+      case _: StructType | _: ArrayType | _: MapType => to_json(n.value)
+      case _                                         => n.value.cast(StringType)
+    }
+
+    protected def isNull(n: Loc): Column = n.value.isNull
+
+    /** Full-validity predicate of `spec` over the value — the composite /
+      * array-element collapsed boolean (reference collapses composite child
+      * errors into one, validator.cr:536-544). Never null. */
+    protected def pred(spec: Spec, n: Loc): Column = {
+      val (v, dt) = (n.value, n.dt)
+      spec match {
+        case NullSpec => v.isNull
+        case g: GenericSpec => conj(checks(g, ColLoc(v, dt), At(".", ".", lit(true))).map(_.pass))
+        case s =>
+          if (!staticGateOk(s, dt)) lit(false)
+          else v.isNotNull && conj(checks(s, ColLoc(v, dt), At(".", ".", v.isNotNull)).map(_.pass))
       }
+    }
+
+    protected def keys(n: Loc): Keys[Loc] = FieldKeys(n.fields.map(_.name), n.fieldCol)
+    protected def has(n: Loc, prop: String): Option[Column] =
+      if (n.has(prop)) Some(n.fieldCol(prop).isNotNull) else None
+    protected def property(n: Loc, prop: String, sub: Spec, present: Column): Option[(Loc, Column)] =
+      if (!n.has(prop)) None
+      else {
+        val c = ColLoc(n.fieldCol(prop), n.fieldType(prop))
+        sub match {
+          case NullSpec => Some((c, present)) // null IS the expected value
+          case _        => Some((c, present && c.value.isNotNull))
+        }
+      }
+    protected def count(n: Loc): Column =
+      n.fields.map(f => n.fieldCol(f.name).isNotNull.cast(IntegerType)).reduce(_ + _)
+    protected def keysObserved(n: Loc): Column = lit(null).cast(StringType)
+
+    private def elemType(n: Loc): DataType = n.dt.asInstanceOf[ArrayType].elementType
+    protected def array(n: Loc): Column = n.value
+    protected def element(n: Loc, e: Column): Loc = ColLoc(e, elemType(n))
+    protected def nullElement(n: Loc): Loc = ColLoc(lit(null).cast(elemType(n)), elemType(n))
+    protected def elementObserved(n: Loc, el: Column): Column = el
+    protected def comparable(n: Loc): Column = n.value
+    // hottest expression of the token suite: the element-domain forall is
+    // a CodegenFallback HOF; use the native codegen'd range loop when the
+    // subschema is a pure integral range and graft extensions are active
+    // (identical semantics — ExtSpec pins parity incl. null elements)
+    override protected def allItems(n: Loc, sub: Spec): Option[Column] =
+      nativeRangeForall(sub, n.value, elemType(n))
+
+    protected def string(n: Loc): Scalar = Scalar(n.value, n.value, json(n))
+    protected def number(n: Loc): Scalar = Scalar(n.value, n.value, json(n))
+    // integrality is statically true for integral column types
+    protected def integral(n: Loc): Boolean = !isFractional(n.dt)
+    protected def bound(b: BigDecimal): Column =
+      if (b.isWhole && b.isValidLong) lit(b.toLong) else lit(b.toDouble)
+
+    /** Deep-equality membership (validate_enum, validator.cr:40-55): typed
+      * `isin` for scalars (InSet — strictly better than the reference's linear
+      * early-exit scan), canonical-JSON comparison for arrays/objects. */
+    protected def enumOk(n: Loc, values: Vector[JsonVal]): Column = {
+      val v = n.value
+      n.dt match {
+        case StringType =>
+          val vals = values.collect { case JStr(s) => s }
+          if (vals.isEmpty) lit(false) else v.isin(vals: _*)
+        case BooleanType =>
+          val vals = values.collect { case JBool(b) => b }
+          if (vals.isEmpty) lit(false) else v.isin(vals: _*)
+        case _: NumericType =>
+          val nums = values.collect { case x: JNum => x }
+          if (nums.isEmpty) lit(false)
+          else if (nums.forall(x => x.isWholeNum && x.v.isValidLong) && !isFractional(n.dt))
+            v.isin(nums.map(_.v.toLong): _*)
+          else v.cast(DoubleType).isin(nums.map(_.toDouble): _*)
+        case _: ArrayType | _: StructType =>
+          val rendered = values.collect {
+            case a: JArr => renderForType(a, n.dt)
+            case o: JObj => renderForType(o, n.dt)
+          }
+          if (rendered.isEmpty) lit(false) else to_json(v).isin(rendered: _*)
+        case _ => lit(false)
+      }
+    }
+
+    protected def constOk(n: Loc, c: JsonVal): Column = {
+      val (v, dt) = (n.value, n.dt)
+      c match {
+        case JStr(s) if dt == StringType                => v === s
+        case JBool(b) if dt == BooleanType              => v === b
+        case x: JNum if dt.isInstanceOf[NumericType]    => v.cast(DoubleType) === x.toDouble
+        case JNull                                      => v.isNull
+        case a: JArr if dt.isInstanceOf[ArrayType]      => to_json(v) === renderForType(a, dt)
+        case o: JObj if dt.isInstanceOf[StructType]     => to_json(v) === renderForType(o, dt)
+        case _                                          => lit(false)
+      }
+    }
   }
 
   private def conj(cs: Seq[Column]): Column =
@@ -114,280 +182,6 @@ object Compiler {
     case BoolSpec       => dt == BooleanType
     case NullSpec       => true
     case _: GenericSpec => true
-  }
-
-  private def gateFailure(spec: Spec): (String, String) = spec match {
-    case _: ObjSpec => ("type:object", Messages.notObject)
-    case _: ArrSpec => ("type:array", Messages.notArray)
-    case _: StrSpec => ("type:string", Messages.notString)
-    case _: NumSpec => ("type:number", Messages.notNumber)
-    case BoolSpec   => ("type:boolean", Messages.notBoolean)
-    case other      => throw new IllegalStateException(s"no gate for $other")
-  }
-
-  /** Compile the checks of `spec` for the value at `loc`.
-    *
-    * `present`: condition under which the value is considered present; a
-    * check wraps as `when(present, ok).otherwise(true)` so absent values
-    * never violate (reference: properties checked iff present,
-    * validator.cr:163-172). `nullFailsGate`: root-value mode — a null value
-    * is a type-gate error instead of "absent".
-    */
-  private def specChecks(
-      spec: Spec,
-      loc: Loc,
-      path: String,
-      idp: String,
-      present: Column,
-      nullFailsGate: Boolean
-  ): Vector[CompiledCheck] = {
-
-    def mk(keyword: String, message: String, ok: Column, observed: Column,
-           checkPath: String = path, id: String = null, pres: Column = present): CompiledCheck =
-      CompiledCheck(
-        id = if (id == null) s"$idp/$keyword" else id,
-        path = if (checkPath == null) path else checkPath,
-        keyword = keyword, message = message, rank = -1,
-        pass = when(pres, coalesce(ok, lit(false))).otherwise(lit(true)),
-        observed = observed.cast(StringType)
-      )
-
-    def obsOf(l: Loc): Column = l.dt match {
-      case _: StructType | _: ArrayType | _: MapType => to_json(l.value)
-      case _                                         => l.value.cast(StringType)
-    }
-
-    spec match {
-      case NullSpec =>
-        // whole validator is the single null check (validator.cr:472-479)
-        Vector(mk("type:null", Messages.notNull, loc.value.isNull, obsOf(loc)))
-
-      case BoolSpec =>
-        if (staticGateOk(BoolSpec, loc.dt)) {
-          if (nullFailsGate)
-            Vector(mk("type:boolean", Messages.notBoolean, loc.value.isNotNull, obsOf(loc)))
-          else Vector.empty
-        } else Vector(mk("type:boolean", Messages.notBoolean, lit(false), obsOf(loc)))
-
-      case g: GenericSpec =>
-        genericChecks(g, loc, path, idp, present,
-                      (kw, msg, ok, obs, p, id) => mk(kw, msg, ok, obs, p, id), obsOf)
-
-      case s if !staticGateOk(s, loc.dt) =>
-        // static type mismatch: the gate error short-circuits everything else
-        val (kw, msg) = gateFailure(s)
-        Vector(mk(kw, msg, lit(false), obsOf(loc)))
-
-      case s =>
-        // gate passes statically; in root-value mode null still fails it
-        val (gateChecks, p) =
-          if (nullFailsGate) {
-            val (kw, msg) = gateFailure(s)
-            (Vector(mk(kw, msg, loc.value.isNotNull, obsOf(loc))),
-             present && loc.value.isNotNull)
-          } else (Vector.empty[CompiledCheck], present)
-
-        def mkp(keyword: String, message: String, ok: Column, observed: Column,
-                checkPath: String = path, id: String = null): CompiledCheck =
-          mk(keyword, message, ok, observed, checkPath, id, p)
-
-        gateChecks ++ (s match {
-          case o: ObjSpec => objectChecks(o, loc, path, idp, p, mkp, obsOf)
-          case a: ArrSpec => arrayChecks(a, loc, path, idp, p, mkp, obsOf)
-          case st: StrSpec => stringChecks(st, loc, path, idp, p, mkp, obsOf)
-          case n: NumSpec => numberChecks(n, loc, path, idp, p, mkp, obsOf)
-          case _          => Vector.empty
-        })
-    }
-  }
-
-  // -- object keywords (validator.cr:112-219; order fixes golden output) ----
-
-  private def objectChecks(
-      o: ObjSpec, loc: Loc, path: String, idp: String, present: Column,
-      mk: (String, String, Column, Column, String, String) => CompiledCheck,
-      obsOf: Loc => Column
-  ): Vector[CompiledCheck] = {
-    def mkc(kw: String, msg: String, ok: Column, obs: Column,
-            p: String = path, id: String = null) = mk(kw, msg, ok, obs, p, id)
-
-    val names = loc.fields.map(_.name)
-
-    val requiredChecks = o.required.getOrElse(Vector.empty).map { prop =>
-      val ok = if (loc.has(prop)) loc.fieldCol(prop).isNotNull else lit(false)
-      mkc(s"required:$prop", Messages.required(prop), ok, lit(null).cast(StringType),
-          path, s"$idp/required:$prop")
-    }
-
-    // spec-correct presence guard (the reference omits it — quirk at
-    // validator.cr:124, divergence documented in FIXTURES.md §4)
-    val depRequiredChecks = o.dependentRequired.flatMap { case (dep, reqs) =>
-      reqs.map { req =>
-        val depPresent = if (loc.has(dep)) loc.fieldCol(dep).isNotNull else lit(false)
-        val reqPresent = if (loc.has(req)) loc.fieldCol(req).isNotNull else lit(false)
-        mkc(s"dependentRequired:$req:$dep", Messages.dependentRequired(req, dep),
-            when(depPresent, reqPresent).otherwise(lit(true)), lit(null).cast(StringType),
-            path, s"$idp/dependentRequired($dep,$req)")
-      }
-    }
-
-    // whole object re-validated against the sub-schema when dep is present;
-    // child errors surfaced verbatim (validator.cr:131-140)
-    val depSchemaChecks = o.dependentSchemas.flatMap { case (dep, sub) =>
-      if (!loc.has(dep)) Vector.empty
-      else specChecks(sub, loc, path, s"$idp~dep($dep)",
-                      present && loc.fieldCol(dep).isNotNull, nullFailsGate = false)
-    }
-
-    // every key name validated as a string — fully driver-static for closed
-    // Spark schemas (validator.cr:142-149)
-    val propNameChecks = o.propertyNames.toVector.flatMap { ps =>
-      names.flatMap { name =>
-        evalStrOnLiteral(ps, name).map { case (kw, msg) =>
-          mkc(s"propertyNames:$name:$kw", msg, lit(false), lit(name),
-              childPath(path, name), s"$idp/propertyNames($name)/$kw")
-        }
-      }
-    }
-
-    def presentCount: Column =
-      names.map(n => loc.fieldCol(n).isNotNull.cast(IntegerType)).reduce(_ + _)
-
-    val minPropChecks = o.minProperties.toVector.map { n =>
-      mkc("minProperties", Messages.minProperties(n), presentCount >= n, presentCount.cast(StringType))
-    }
-    val maxPropChecks = o.maxProperties.toVector.map { n =>
-      mkc("maxProperties", Messages.maxProperties(n), presentCount <= n, presentCount.cast(StringType))
-    }
-
-    val propChecks = o.properties.flatMap { case (prop, sub) =>
-      if (!loc.has(prop)) Vector.empty // absence is required's job (validator.cr:163-172)
-      else {
-        val sloc = ColLoc(loc.fieldCol(prop), loc.fieldType(prop))
-        val subPresent = sub match {
-          case NullSpec => present // null IS the expected value; check runs whenever parent present
-          case _        => present && sloc.value.isNotNull
-        }
-        specChecks(sub, sloc, childPath(path, prop), childIdp(idp, prop), subPresent,
-                   nullFailsGate = false)
-      }
-    }
-
-    val patternChecks = o.patternProperties.zipWithIndex.flatMap { case ((re, sub), j) =>
-      val regex = re.r
-      names.filter(n => regex.findFirstIn(n).isDefined).flatMap { prop =>
-        val sloc = ColLoc(loc.fieldCol(prop), loc.fieldType(prop))
-        val subPresent = sub match {
-          case NullSpec => present
-          case _        => present && sloc.value.isNotNull
-        }
-        specChecks(sub, sloc, childPath(path, prop), s"${childIdp(idp, prop)}~pp$j",
-                   subPresent, nullFailsGate = false)
-      }
-    }
-
-    // spec-correct "additional": not declared in properties AND not matched
-    // by any patternProperties regex (reference counts pattern-matched keys
-    // as additional — quirk at validator.cr:185-187, documented divergence)
-    val declared = o.properties.map(_._1).toSet
-    val patternRes = o.patternProperties.map(_._1.r)
-    def isAdditional(n: String): Boolean =
-      !declared.contains(n) && !patternRes.exists(_.findFirstIn(n).isDefined)
-    val additionalNames = names.filter(isAdditional)
-
-    val additionalChecks =
-      if (o.additionalDisabled && additionalNames.nonEmpty) {
-        val ok = additionalNames.map(n => loc.fieldCol(n).isNull).reduce(_ && _)
-        val obs = to_json(struct(additionalNames.map(n => loc.fieldCol(n).as(n)): _*))
-        Vector(mkc("additionalProperties", Messages.additionalProperties, ok, obs))
-      } else if (o.additionalProperties.isDefined) {
-        additionalNames.toVector.flatMap { prop =>
-          val sub = o.additionalProperties.get
-          val sloc = ColLoc(loc.fieldCol(prop), loc.fieldType(prop))
-          val subPresent = sub match {
-            case NullSpec => present
-            case _        => present && sloc.value.isNotNull
-          }
-          specChecks(sub, sloc, childPath(path, prop), s"${childIdp(idp, prop)}~ap",
-                     subPresent, nullFailsGate = false)
-        }
-      } else Vector.empty
-
-    val enumChecks = enumCheck(o.enumList, loc, mkc, obsOf)
-    val compChecks = compositeChecks(o.composites, loc, idp, mkc, obsOf)
-
-    (requiredChecks ++ depRequiredChecks ++ depSchemaChecks ++ propNameChecks ++
-      minPropChecks ++ maxPropChecks ++ propChecks ++ patternChecks ++
-      additionalChecks ++ enumChecks ++ compChecks).toVector
-  }
-
-  // -- array keywords (validator.cr:239-332) --------------------------------
-
-  private def arrayChecks(
-      a: ArrSpec, loc: Loc, path: String, idp: String, present: Column,
-      mk: (String, String, Column, Column, String, String) => CompiledCheck,
-      obsOf: Loc => Column
-  ): Vector[CompiledCheck] = {
-    val v = loc.value
-    val elemType = loc.dt.asInstanceOf[ArrayType].elementType
-    def mkc(kw: String, msg: String, ok: Column, obs: Column,
-            p: String = path, id: String = null) = mk(kw, msg, ok, obs, p, id)
-
-    val itemsChecks = a.items.toVector.map { sub =>
-      val offending = filter(v, e => !pred(sub, e, elemType))
-      // hottest expression of the token suite: the element-domain forall is
-      // a CodegenFallback HOF; use the native codegen'd range loop when the
-      // subschema is a pure integral range and graft extensions are active
-      // (identical semantics — ExtSpec pins parity incl. null elements)
-      val ok = nativeRangeForall(sub, v, elemType)
-        .getOrElse(forall(v, e => pred(sub, e, elemType)))
-      mkc("items", itemsMessage(sub, elemType), ok, to_json(offending))
-    }
-
-    // spec-correct bounds guard — the reference indexes unconditionally and
-    // crashes on short arrays (quirk at validator.cr:254)
-    val prefixChecks = a.prefixItems.zipWithIndex.map { case (sub, i) =>
-      val el = element_at(v, i + 1)
-      mkc(s"prefixItems[$i]", itemsMessage(sub, elemType),
-          when(size(v) > i, pred(sub, el, elemType)).otherwise(lit(true)),
-          el, childIndexPath(path, i), s"$idp/prefixItems[$i]")
-    }
-
-    val tupleChecks =
-      if (a.tupleClosed)
-        Vector(mkc("items:false", Messages.tupleLength(a.prefixItems.size),
-                   size(v) <= a.prefixItems.size, size(v).cast(StringType)))
-      else Vector.empty
-
-    val containsChecks = a.contains.toVector.flatMap { sub =>
-      val matchedCount = size(filter(v, e => pred(sub, e, elemType)))
-      val minC = a.minContains.map(n =>
-        mkc("minContains", Messages.minContains(n), matchedCount >= n, matchedCount.cast(StringType)))
-      val maxC = a.maxContains.map(n =>
-        mkc("maxContains", Messages.maxContains(n), matchedCount <= n, matchedCount.cast(StringType)))
-      val bare =
-        if (a.minContains.isEmpty && a.maxContains.isEmpty)
-          Some(mkc("contains", Messages.contains, exists(v, e => pred(sub, e, elemType)), to_json(v)))
-        else None
-      (minC ++ maxC ++ bare).toVector
-    }
-
-    val minItemsChecks = a.minItems.toVector.map(n =>
-      mkc("minItems", Messages.minItems(n), size(v) >= n, size(v).cast(StringType)))
-    val maxItemsChecks = a.maxItems.toVector.map(n =>
-      mkc("maxItems", Messages.maxItems(n), size(v) <= n, size(v).cast(StringType)))
-
-    val uniqueChecks =
-      if (a.uniqueItems)
-        Vector(mkc("uniqueItems", Messages.uniqueItems,
-                   size(array_distinct(v)) === size(v), to_json(v)))
-      else Vector.empty
-
-    val enumChecks = enumCheck(a.enumList, loc, mkc, obsOf)
-    val compChecks = compositeChecks(a.composites, loc, idp, mkc, obsOf)
-
-    itemsChecks ++ prefixChecks ++ tupleChecks ++ containsChecks ++
-      minItemsChecks ++ maxItemsChecks ++ uniqueChecks ++ enumChecks ++ compChecks
   }
 
   /** Native `graft_all_in_range` fast path for the commonest 100-TB items
@@ -406,7 +200,7 @@ object Compiler {
           n.multipleOf.isEmpty && n.enumList.isEmpty && n.composites.isEmpty &&
           Seq(n.minimum, n.maximum, n.exclusiveMinimum, n.exclusiveMaximum)
             .forall(_.forall(b => b.isWhole && b.isValidLong)) &&
-          nativeRangeAvailable =>
+          graft.ext.GraftExtensions.installed("graft_all_in_range") =>
       val (lo, ls) = (n.minimum.map(b => (b.toLong, false)) ++
           n.exclusiveMinimum.map(b => (b.toLong, true)))
         .foldLeft((Long.MinValue, false)) { case ((bl, bs), (xl, xs)) =>
@@ -419,150 +213,6 @@ object Compiler {
         }
       Some(call_function("graft_all_in_range", v, lit(lo), lit(hi), lit(ls), lit(hs)))
     case _ => None
-  }
-
-  private def nativeRangeAvailable: Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession.exists { s =>
-      try s.catalog.functionExists("graft_all_in_range")
-      catch { case _: Throwable => false }
-    }
-
-  /** Items sub-errors surface the child's own failure message where the
-    * subschema is a single-keyword spec (the reference surfaces child errors
-    * verbatim, validator.cr:243-250); otherwise a collapsed message. */
-  private def itemsMessage(sub: Spec, elemType: DataType): String = {
-    val cs = specChecks(sub, ColLoc(lit(null).cast(elemType), elemType), ".", ".",
-                        lit(true), nullFailsGate = false)
-    if (cs.size == 1) cs.head.message else "Expected array items to match schema"
-  }
-
-  // -- string keywords (validator.cr:338-397) -------------------------------
-
-  private def stringChecks(
-      s: StrSpec, loc: Loc, path: String, idp: String, present: Column,
-      mk: (String, String, Column, Column, String, String) => CompiledCheck,
-      obsOf: Loc => Column
-  ): Vector[CompiledCheck] = {
-    val v = loc.value
-    def mkc(kw: String, msg: String, ok: Column, obs: Column,
-            p: String = path, id: String = null) = mk(kw, msg, ok, obs, p, id)
-
-    val minL = s.minLength.toVector.map(n =>
-      mkc("minLength", Messages.minLength(n), length(v) >= n, v))
-    val maxL = s.maxLength.toVector.map(n =>
-      mkc("maxLength", Messages.maxLength(n), length(v) <= n, v))
-    val pat = s.pattern.toVector.map(p =>
-      mkc("pattern", Messages.pattern(p), v.rlike(p), v)) // unanchored search, like `=~`
-    val fmt = s.format.toVector.flatMap { name =>
-      if (Formats.unsupported.contains(name))
-        throw SpecError(s"""format "$name" is not implemented""")
-      if (name == "regex")
-        Vector(mkc("format", Messages.format(name), Formats.regexCompiles(v), v))
-      else Formats.regexFor(name).map(re =>
-        mkc("format", Messages.format(name), v.rlike(re), v)).toVector
-    }
-    val enumChecks = enumCheck(s.enumList, loc, mkc, obsOf)
-    val compChecks = compositeChecks(s.composites, loc, idp, mkc, obsOf)
-    minL ++ maxL ++ pat ++ fmt ++ enumChecks ++ compChecks
-  }
-
-  /** Driver-side StrSpec evaluation on a literal (for propertyNames —
-    * validator.cr:142-149): returns (keyword, message) per failed check. */
-  def evalStrOnLiteral(s: StrSpec, value: String): Vector[(String, String)] = {
-    val fails = Vector.newBuilder[(String, String)]
-    s.minLength.foreach(n => if (value.codePointCount(0, value.length) < n)
-      fails += ("minLength" -> Messages.minLength(n)))
-    s.maxLength.foreach(n => if (value.codePointCount(0, value.length) > n)
-      fails += ("maxLength" -> Messages.maxLength(n)))
-    s.pattern.foreach(p => if (!p.r.findFirstIn(value).isDefined)
-      fails += ("pattern" -> Messages.pattern(p)))
-    s.format.foreach(f => if (Formats.regexFor(f).isDefined && !Formats.matches(f, value))
-      fails += ("format" -> Messages.format(f)))
-    if (s.enumList.nonEmpty && !s.enumList.contains(JStr(value)))
-      fails += ("enum" -> Messages.enumMismatch)
-    fails.result()
-  }
-
-  // -- number keywords (validator.cr:402-467) -------------------------------
-
-  private def numberChecks(
-      n: NumSpec, loc: Loc, path: String, idp: String, present: Column,
-      mk: (String, String, Column, Column, String, String) => CompiledCheck,
-      obsOf: Loc => Column
-  ): Vector[CompiledCheck] = {
-    val v = loc.value
-    def mkc(kw: String, msg: String, ok: Column, obs: Column,
-            p: String = path, id: String = null) = mk(kw, msg, ok, obs, p, id)
-
-    val fractional = loc.dt match {
-      case FloatType | DoubleType => true
-      case _: DecimalType         => true
-      case _                      => false
-    }
-
-    // integrality accepts 100.0 (validator.cr:404,417-419); statically true
-    // for integral column types
-    val intChecks =
-      if (n.integer && fractional)
-        Vector(mkc("type:integer", Messages.notInteger, v % 1 === 0, v))
-      else Vector.empty
-
-    def cmp(kw: String, msg: String, ok: Column) = mkc(kw, msg, ok, v)
-    val minChecks = n.minimum.toVector.map(b => cmp("minimum", Messages.minimum(b), v >= numLit(b)))
-    val maxChecks = n.maximum.toVector.map(b => cmp("maximum", Messages.maximum(b), v <= numLit(b)))
-    val eMinChecks = n.exclusiveMinimum.toVector.map(b =>
-      cmp("exclusiveMinimum", Messages.exclusiveMinimum(b), v > numLit(b)))
-    val eMaxChecks = n.exclusiveMaximum.toVector.map(b =>
-      cmp("exclusiveMaximum", Messages.exclusiveMaximum(b), v < numLit(b)))
-    val multChecks = n.multipleOf.toVector.map(b =>
-      cmp("multipleOf", Messages.multipleOf(b), v % numLit(b) === 0))
-
-    val enumChecks = enumCheck(n.enumList, loc, mkc, obsOf)
-    val compChecks = compositeChecks(n.composites, loc, idp, mkc, obsOf)
-
-    intChecks ++ minChecks ++ maxChecks ++ eMinChecks ++ eMaxChecks ++
-      multChecks ++ enumChecks ++ compChecks
-  }
-
-  private def numLit(b: BigDecimal): Column =
-    if (b.isWhole && b.isValidLong) lit(b.toLong) else lit(b.toDouble)
-
-  // -- shared: enum / const / composites ------------------------------------
-
-  private def enumCheck(
-      enumList: Vector[JsonVal], loc: Loc,
-      mkc: (String, String, Column, Column, String, String) => CompiledCheck,
-      obsOf: Loc => Column
-  ): Vector[CompiledCheck] =
-    if (enumList.isEmpty) Vector.empty
-    else Vector(mkc("enum", Messages.enumMismatch, enumOk(enumList, loc), obsOf(loc), null, null))
-
-  /** Deep-equality membership (validate_enum, validator.cr:40-55): typed
-    * `isin` for scalars (InSet — strictly better than the reference's linear
-    * early-exit scan), canonical-JSON comparison for arrays/objects. */
-  private def enumOk(enumList: Vector[JsonVal], loc: Loc): Column = {
-    val v = loc.value
-    loc.dt match {
-      case StringType =>
-        val vals = enumList.collect { case JStr(s) => s }
-        if (vals.isEmpty) lit(false) else v.isin(vals: _*)
-      case BooleanType =>
-        val vals = enumList.collect { case JBool(b) => b }
-        if (vals.isEmpty) lit(false) else v.isin(vals: _*)
-      case _: NumericType =>
-        val nums = enumList.collect { case n: JNum => n }
-        if (nums.isEmpty) lit(false)
-        else if (nums.forall(n => n.isWholeNum && n.v.isValidLong) && !isFractional(loc.dt))
-          v.isin(nums.map(_.v.toLong): _*)
-        else v.cast(DoubleType).isin(nums.map(_.toDouble): _*)
-      case _: ArrayType | _: StructType =>
-        val rendered = enumList.collect {
-          case a: JArr => renderForType(a, loc.dt)
-          case o: JObj => renderForType(o, loc.dt)
-        }
-        if (rendered.isEmpty) lit(false) else to_json(v).isin(rendered: _*)
-      case _ => lit(false)
-    }
   }
 
   private def isFractional(dt: DataType): Boolean = dt match {
@@ -598,71 +248,4 @@ object Compiler {
       (known ++ extra).mkString("{", ",", "}")
     case _ => j.render
   }
-
-  private def genericChecks(
-      g: GenericSpec, loc: Loc, path: String, idp: String, present: Column,
-      mk: (String, String, Column, Column, String, String) => CompiledCheck,
-      obsOf: Loc => Column
-  ): Vector[CompiledCheck] = {
-    def mkc(kw: String, msg: String, ok: Column, obs: Column,
-            p: String = path, id: String = null) = mk(kw, msg, ok, obs, p, id)
-    val v = loc.value
-
-    val enumChecks = enumCheck(g.enumList, loc, mkc, obsOf)
-
-    val constChecks = g.const.toVector.map { c =>
-      val ok = c match {
-        case JStr(s) if loc.dt == StringType    => v === s
-        case JBool(b) if loc.dt == BooleanType  => v === b
-        case n: JNum if loc.dt.isInstanceOf[NumericType] =>
-          v.cast(DoubleType) === n.toDouble
-        case JNull                               => v.isNull
-        case a: JArr if loc.dt.isInstanceOf[ArrayType] => to_json(v) === renderForType(a, loc.dt)
-        case o: JObj if loc.dt.isInstanceOf[StructType] => to_json(v) === renderForType(o, loc.dt)
-        case _                                   => lit(false)
-      }
-      mkc("const", Messages.constMismatch(constRender(c)), ok, obsOf(loc))
-    }
-
-    val compChecks = compositeChecks(g.composites, loc, idp, mkc, obsOf)
-    enumChecks ++ constChecks ++ compChecks
-  }
-
-  /** Crystal `JSON::Any` interpolation for the const message — strings are
-    * unquoted ("Expected value to be testing", generic_validator_spec.cr:49). */
-  private def constRender(v: JsonVal): String = v match {
-    case JStr(s) => s
-    case other   => other.render
-  }
-
-  /** Composites evaluated last, each collapsing to ONE error
-    * (validator.cr:496-531, 536-544). */
-  private def compositeChecks(
-      composites: Vector[Composite], loc: Loc, idp: String,
-      mkc: (String, String, Column, Column, String, String) => CompiledCheck,
-      obsOf: Loc => Column
-  ): Vector[CompiledCheck] =
-    composites.map { c =>
-      val preds = c.children.map(ch => coalesce(pred(ch, loc.value, loc.dt), lit(false)))
-      val ok =
-        if (preds.isEmpty) lit(c.kind == "allOf" || c.kind == "not")
-        else c.kind match {
-          case "allOf" => preds.reduce(_ && _)
-          case "anyOf" => preds.reduce(_ || _)
-          case "oneOf" => preds.map(_.cast(IntegerType)).reduce(_ + _) === 1
-          case "not"   => !preds.reduce(_ || _) // all children invalid (varargs, validator.cr:523-526)
-        }
-      mkc(c.kind, Messages.composite(c.kind), ok, obsOf(loc), null, s"$idp/${c.kind}")
-    }
-
-  // -- path bookkeeping (node_context.cr:16-28, 71-77) ----------------------
-
-  private def childPath(parent: String, prop: String): String =
-    if (parent == ".") s".$prop" else s"$parent.$prop"
-
-  private def childIndexPath(parent: String, i: Int): String =
-    if (parent == ".") s".[$i]" else s"$parent[$i]"
-
-  private def childIdp(idp: String, prop: String): String =
-    if (idp == ".") s".$prop" else s"$idp.$prop"
 }

@@ -2,7 +2,7 @@ package graft.compile
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StringType}
+import org.apache.spark.sql.types.StringType
 
 import graft.spec._
 
@@ -15,6 +15,9 @@ import graft.spec._
   * (present-null vs absent — the distinction the typed-column mode cannot
   * express). All checks remain pure Catalyst expressions; recursion over
   * nested values happens at plan-build time via variant path extraction.
+  * Keyword order, ids, paths and messages come from `KeywordWalk` (whose
+  * scaladoc lists how this backend differs from `Compiler`); this backend
+  * supplies the Columns.
   *
   * Staging (the r1→r2 performance fix): variant derivations
   * (`schema_of_variant`, `try_variant_get` extractions, child values) are
@@ -25,13 +28,6 @@ import graft.spec._
   * un-inlined), so per-row cost is one parse + one type-derivation +
   * one extraction per value node, not per check. Lambda-scoped nodes (array
   * elements, runtime object keys) cannot be projected and stay inline.
-  *
-  * Differences from the typed-column `Compiler` (documented):
-  *  - patternProperties / additionalProperties over RUNTIME keys collapse to
-  *    one check per keyword (offending keys ride in `observed`) instead of
-  *    one check per schema column.
-  *  - uniqueItems/enum deep-equality uses canonical `to_json` (object key
-  *    order sensitivity is inherited from the serialization).
   */
 object VariantCompiler {
 
@@ -55,16 +51,6 @@ object VariantCompiler {
     def columns: Seq[(String, Column)] = entries.values.toSeq
   }
 
-  /** True when the active session has GraftExtensions installed — type
-    * gates then use the native codegen'd `graft_variant_kind` instead of
-    * CodegenFallback `schema_of_variant` string matching (identical gate
-    * outcomes — see graft.ext.VariantKind). */
-  private def nativeKindAvailable: Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession.exists { s =>
-      try s.catalog.functionExists("graft_variant_kind")
-      catch { case _: Throwable => false }
-    }
-
   /** One JSON value node. Accessors memoize expensive derivations as staged
     * projection columns for NAMED nodes (root, property chains); lambda
     * -scoped nodes (array elements, runtime keys) compute inline. */
@@ -72,7 +58,10 @@ object VariantCompiler {
     private def memo(suffix: String, c: => Column): Column =
       stager.fold(c)(st => st.stage(s"$key#$suffix", c))
 
-    private lazy val native: Boolean = nativeKindAvailable
+    // type gates use the native codegen'd `graft_variant_kind` when the
+    // session has GraftExtensions, else CodegenFallback `schema_of_variant`
+    // string matching (identical outcomes — see graft.ext.VariantKind)
+    private lazy val native: Boolean = graft.ext.GraftExtensions.installed("graft_variant_kind")
     lazy val kind: Column = memo("kind", call_function("graft_variant_kind", v))
     lazy val tpe: Column = memo("tpe", schema_of_variant(v))
     lazy val asStr: Column = memo("str", try_variant_get(v, "$", "string"))
@@ -110,369 +99,94 @@ object VariantCompiler {
     * of `validator.validate(node)`); derivations inline. Prefer
     * `compileStaged` for data-scale runs. */
   def compile(spec: Spec, v: Column): Vector[CompiledCheck] =
-    rank(specChecks(spec, inlineNode(v), ".", ".", lit(true)))
+    Variant.ranked(spec, inlineNode(v), ".", nullFailsGate = true)
 
   /** Compile with staged derivations: returns the (name, expr) projection
     * columns to add BEFORE the check projection (in order — later staged
     * columns reference earlier ones), plus the checks referencing them. */
   def compileStaged(spec: Spec, v: Column): (Seq[(String, Column)], Vector[CompiledCheck]) = {
     val st = new Stager
-    val checks = rank(specChecks(spec, new VNode(v, "$", Some(st)), ".", ".", lit(true)))
+    val checks = Variant.ranked(spec, new VNode(v, "$", Some(st)), ".", nullFailsGate = true)
     (st.columns, checks)
   }
 
-  private def rank(cs: Vector[CompiledCheck]): Vector[CompiledCheck] = {
-    val ids = cs.map(_.id)
-    require(ids.distinct.size == ids.size, s"duplicate constraint ids: ${ids.diff(ids.distinct)}")
-    cs.zipWithIndex.map { case (c, i) => c.copy(rank = i) }
-  }
+  private object Variant extends KeywordWalk[VNode] {
+    import KeywordWalk._
 
-  /** Collapsed full-validity predicate (composites / array elements). */
-  def pred(spec: Spec, v: Column): Column = predN(spec, inlineNode(v))
+    // every gate is decided per row, on the runtime type
+    protected def gate(spec: Spec, n: VNode, nullFailsGate: Boolean): Gate = GateWhen(spec match {
+      case _: ObjSpec => n.isObj
+      case _: ArrSpec => n.isArr
+      case _: StrSpec => n.isStr
+      case _: NumSpec => n.isNum
+      case _          => n.isBool
+    })
 
-  private def predN(spec: Spec, n: VNode): Column = spec match {
-    case NullSpec => n.isJsonNull
-    case _ =>
-      val checks = specChecks(spec, n, ".", ".", lit(true))
-      if (checks.isEmpty) n.v.isNotNull && !is_variant_null(n.v)
-      else checks.map(_.pass).reduce(_ && _)
-  }
+    protected def json(n: VNode): Column = n.json
+    protected def isNull(n: VNode): Column = n.isJsonNull
 
-  private def gateFor(spec: Spec, n: VNode): Option[(String, String, Column)] = spec match {
-    case _: ObjSpec     => Some(("type:object", Messages.notObject, n.isObj))
-    case _: ArrSpec     => Some(("type:array", Messages.notArray, n.isArr))
-    case _: StrSpec     => Some(("type:string", Messages.notString, n.isStr))
-    case _: NumSpec     => Some(("type:number", Messages.notNumber, n.isNum))
-    case BoolSpec       => Some(("type:boolean", Messages.notBoolean, n.isBool))
-    case NullSpec       => None
-    case _: GenericSpec => None
-  }
-
-  private def specChecks(spec: Spec, n: VNode, path: String, idp: String,
-                         present: Column): Vector[CompiledCheck] = {
-
-    def mk(keyword: String, message: String, ok: Column, observed: Column,
-           checkPath: String = path, id: String = null, pres: Column = present): CompiledCheck =
-      CompiledCheck(
-        id = if (id == null) s"$idp/$keyword" else id,
-        path = if (checkPath == null) path else checkPath,
-        keyword = keyword, message = message, rank = -1,
-        pass = when(pres, coalesce(ok, lit(false))).otherwise(lit(true)),
-        observed = observed.cast(StringType))
-
-    spec match {
-      case NullSpec =>
-        Vector(mk("type:null", Messages.notNull, n.isJsonNull, n.json))
-
-      case g: GenericSpec => genericChecks(g, n, path, idp, present, mk)
-
-      case s =>
-        val Some((kw, msg, gateOk)) = gateFor(s, n): @unchecked
-        val gate = mk(kw, msg, gateOk, n.json)
-        val p = present && gateOk
-        def mkp(keyword: String, message: String, ok: Column, observed: Column,
-                checkPath: String = path, id: String = null): CompiledCheck =
-          mk(keyword, message, ok, observed, checkPath, id, p)
-
-        gate +: (s match {
-          case o: ObjSpec  => objectChecks(o, n, path, idp, p, mkp)
-          case a: ArrSpec  => arrayChecks(a, n, path, idp, p, mkp)
-          case st: StrSpec => stringChecks(st, n, mkp)
-          case nm: NumSpec => numberChecks(nm, n, mkp)
-          case BoolSpec    => Vector.empty
-          case _           => Vector.empty
-        })
-    }
-  }
-
-  private type MkFn = (String, String, Column, Column, String, String) => CompiledCheck
-
-  // -- object keywords over runtime keys ------------------------------------
-
-  private def objectChecks(o: ObjSpec, n: VNode, path: String, idp: String,
-                           present: Column, mk: MkFn): Vector[CompiledCheck] = {
-    val m = n.asMap
-    val keys = n.keys
-
-    val requiredChecks = o.required.getOrElse(Vector.empty).map { prop =>
-      mk(s"required:$prop", Messages.required(prop), n.has(prop),
-         n.json, path, s"$idp/required:$prop")
+    /** Collapsed full-validity predicate (composites / array elements). */
+    protected def pred(spec: Spec, n: VNode): Column = spec match {
+      case NullSpec => n.isJsonNull
+      case _ =>
+        val checks = this.checks(spec, n, At(".", ".", lit(true)))
+        if (checks.isEmpty) n.v.isNotNull && !is_variant_null(n.v)
+        else checks.map(_.pass).reduce(_ && _)
     }
 
-    val depRequiredChecks = o.dependentRequired.flatMap { case (dep, reqs) =>
-      reqs.map { req =>
-        mk(s"dependentRequired:$req:$dep", Messages.dependentRequired(req, dep),
-           when(n.has(dep), n.has(req)).otherwise(lit(true)), n.json,
-           path, s"$idp/dependentRequired($dep,$req)")
+    protected def keys(n: VNode): Keys[VNode] =
+      RuntimeKeys(n.keys, k => inlineNode(try_element_at(n.asMap, k)))
+    protected def has(n: VNode, prop: String): Option[Column] = Some(n.has(prop))
+    protected def property(n: VNode, prop: String, sub: Spec, present: Column): Option[(VNode, Column)] = {
+      val c = n.child(prop)
+      Some((c, present && n.has(prop)))
+    }
+    protected def count(n: VNode): Column = size(n.keys)
+    protected def keysObserved(n: VNode): Column = n.json
+
+    protected def array(n: VNode): Column = n.asArr
+    protected def element(n: VNode, e: Column): VNode = inlineNode(e)
+    protected def nullElement(n: VNode): VNode = inlineNode(parse_json(lit("null")))
+    protected def elementObserved(n: VNode, el: Column): Column = n.json
+    protected def comparable(n: VNode): Column = transform(n.asArr, e => to_json(e))
+
+    protected def string(n: VNode): Scalar = Scalar(n.asStr, n.asStr, n.asStr)
+    protected def number(n: VNode): Scalar = {
+      val d = n.asDbl
+      Scalar(d, d.cast(StringType), d.cast(StringType))
+    }
+    protected def integral(n: VNode): Boolean = false
+    protected def bound(b: BigDecimal): Column = lit(b.toDouble)
+    override protected def numberEnumOk(n: VNode, values: Vector[JsonVal]): Column = {
+      val nums = values.collect { case x: JNum => x.toDouble }
+      if (nums.isEmpty) lit(false) else n.asDbl.isin(nums: _*)
+    }
+
+    /** Runtime deep-equality membership across the whole JSON type lattice. */
+    protected def enumOk(n: VNode, values: Vector[JsonVal]): Column = {
+      val strs = values.collect { case JStr(s) => s }
+      val nums = values.collect { case x: JNum => x.toDouble }
+      val bools = values.collect { case JBool(b) => b }
+      val complex = values.collect {
+        case a: JArr => a.render
+        case o: JObj => o.render
       }
+      val branches = Vector(
+        if (strs.nonEmpty) Some(n.isStr && n.asStr.isin(strs: _*)) else None,
+        if (nums.nonEmpty) Some(n.isNum && n.asDbl.isin(nums: _*)) else None,
+        if (bools.nonEmpty) Some(n.isBool && n.asBool.isin(bools: _*)) else None,
+        if (values.contains(JNull)) Some(n.isJsonNull) else None,
+        if (complex.nonEmpty) Some((n.isArr || n.isObj) && n.json.isin(complex: _*)) else None
+      ).flatten
+      if (branches.isEmpty) lit(false) else branches.reduce(_ || _)
     }
 
-    val depSchemaChecks = o.dependentSchemas.flatMap { case (dep, sub) =>
-      specChecks(sub, n, path, s"$idp~dep($dep)", present && n.has(dep))
+    protected def constOk(n: VNode, c: JsonVal): Column = c match {
+      case JStr(s)  => n.isStr && n.asStr === s
+      case x: JNum  => n.isNum && n.asDbl === x.toDouble
+      case JBool(b) => n.isBool && n.asBool === b
+      case JNull    => n.isJsonNull
+      case other    => n.json === other.render
     }
-
-    // runtime key names validated as strings — collapsed to one check per
-    // propertyNames keyword, offending keys in observed
-    val propNameChecks = o.propertyNames.toVector.flatMap { ps =>
-      strKeywordPredicates(ps).map { case (kw, msg, predFn) =>
-        mk(s"propertyNames:$kw", msg,
-           forall(keys, k => predFn(k)),
-           to_json(filter(keys, k => !predFn(k))),
-           path, s"$idp/propertyNames/$kw")
-      }
-    }
-
-    val minPropChecks = o.minProperties.toVector.map(c =>
-      mk("minProperties", Messages.minProperties(c), size(keys) >= c,
-         size(keys).cast(StringType), path, null))
-    val maxPropChecks = o.maxProperties.toVector.map(c =>
-      mk("maxProperties", Messages.maxProperties(c), size(keys) <= c,
-         size(keys).cast(StringType), path, null))
-
-    val propChecks = o.properties.flatMap { case (prop, sub) =>
-      specChecks(sub, n.child(prop), childPath(path, prop), childIdp(idp, prop),
-                 present && n.has(prop))
-    }
-
-    val patternChecks = o.patternProperties.zipWithIndex.flatMap { case ((re, sub), j) =>
-      val matching = filter(keys, k => k.rlike(re))
-      Vector(mk(s"patternProperties[$j]", patternPropsMessage(sub),
-        forall(matching, k => predN(sub, inlineNode(try_element_at(m, k)))),
-        to_json(filter(matching, k => !predN(sub, inlineNode(try_element_at(m, k))))),
-        path, s"$idp/patternProperties[$j]"))
-    }
-
-    val declared = o.properties.map(_._1)
-    val patternRes = o.patternProperties.map(_._1)
-    def additionalKey(k: Column): Column = {
-      val inDeclared = if (declared.isEmpty) lit(false) else k.isin(declared: _*)
-      val inPattern = patternRes.foldLeft(lit(false))((acc, re) => acc || k.rlike(re))
-      !inDeclared && !inPattern
-    }
-    val additionalKeys = filter(keys, additionalKey _)
-
-    val additionalChecks =
-      if (o.additionalDisabled)
-        Vector(mk("additionalProperties", Messages.additionalProperties,
-          size(additionalKeys) === 0, to_json(additionalKeys), path, null))
-      else o.additionalProperties.toVector.map { sub =>
-        mk("additionalProperties", patternPropsMessage(sub),
-          forall(additionalKeys, k => predN(sub, inlineNode(try_element_at(m, k)))),
-          to_json(filter(additionalKeys, k => !predN(sub, inlineNode(try_element_at(m, k))))),
-          path, null)
-      }
-
-    val enumChecks = enumCheck(o.enumList, n, path, idp, mk)
-    val compChecks = compositeChecks(o.composites, n, path, idp, mk)
-
-    (requiredChecks ++ depRequiredChecks ++ depSchemaChecks ++ propNameChecks ++
-      minPropChecks ++ maxPropChecks ++ propChecks ++ patternChecks ++
-      additionalChecks ++ enumChecks ++ compChecks).toVector
   }
-
-  /** Single-check message for collapsed pattern/additional property checks. */
-  private def patternPropsMessage(sub: Spec): String = {
-    val cs = specChecks(sub, inlineNode(parse_json(lit("null"))), ".", ".", lit(true))
-    if (cs.size == 1) cs.head.message else "Expected property values to match schema"
-  }
-
-  // -- array keywords -------------------------------------------------------
-
-  private def arrayChecks(a: ArrSpec, n: VNode, path: String, idp: String,
-                          present: Column, mk: MkFn): Vector[CompiledCheck] = {
-    val arr = n.asArr
-
-    val itemsChecks = a.items.toVector.map { sub =>
-      mk("items", itemsMessage(sub), forall(arr, e => predN(sub, inlineNode(e))),
-         to_json(filter(arr, e => !predN(sub, inlineNode(e)))), path, null)
-    }
-
-    val prefixChecks = a.prefixItems.zipWithIndex.map { case (sub, i) =>
-      val el = element_at(arr, i + 1)
-      mk(s"prefixItems[$i]", itemsMessage(sub),
-         when(size(arr) > i, predN(sub, inlineNode(el))).otherwise(lit(true)),
-         n.json, childIndexPath(path, i), s"$idp/prefixItems[$i]")
-    }
-
-    val tupleChecks =
-      if (a.tupleClosed)
-        Vector(mk("items:false", Messages.tupleLength(a.prefixItems.size),
-          size(arr) <= a.prefixItems.size, size(arr).cast(StringType), path, null))
-      else Vector.empty
-
-    val containsChecks = a.contains.toVector.flatMap { sub =>
-      val matched = size(filter(arr, e => predN(sub, inlineNode(e))))
-      val minC = a.minContains.map(c => mk("minContains", Messages.minContains(c),
-        matched >= c, matched.cast(StringType), path, null))
-      val maxC = a.maxContains.map(c => mk("maxContains", Messages.maxContains(c),
-        matched <= c, matched.cast(StringType), path, null))
-      val bare = if (a.minContains.isEmpty && a.maxContains.isEmpty)
-        Some(mk("contains", Messages.contains, exists(arr, e => predN(sub, inlineNode(e))),
-          n.json, path, null))
-      else None
-      (minC ++ maxC ++ bare).toVector
-    }
-
-    val minItemsChecks = a.minItems.toVector.map(c =>
-      mk("minItems", Messages.minItems(c), size(arr) >= c, size(arr).cast(StringType), path, null))
-    val maxItemsChecks = a.maxItems.toVector.map(c =>
-      mk("maxItems", Messages.maxItems(c), size(arr) <= c, size(arr).cast(StringType), path, null))
-
-    val uniqueChecks =
-      if (a.uniqueItems)
-        Vector(mk("uniqueItems", Messages.uniqueItems,
-          size(array_distinct(transform(arr, e => to_json(e)))) === size(arr),
-          n.json, path, null))
-      else Vector.empty
-
-    val enumChecks = enumCheck(a.enumList, n, path, idp, mk)
-    val compChecks = compositeChecks(a.composites, n, path, idp, mk)
-
-    itemsChecks ++ prefixChecks ++ tupleChecks ++ containsChecks ++
-      minItemsChecks ++ maxItemsChecks ++ uniqueChecks ++ enumChecks ++ compChecks
-  }
-
-  private def itemsMessage(sub: Spec): String = {
-    val cs = specChecks(sub, inlineNode(parse_json(lit("null"))), ".", ".", lit(true))
-    if (cs.size == 1) cs.head.message else "Expected array items to match schema"
-  }
-
-  // -- string keywords ------------------------------------------------------
-
-  /** (keyword, message, plain-string predicate) triples for a StrSpec —
-    * shared by string checks and propertyNames key validation. */
-  private def strKeywordPredicates(s: StrSpec): Vector[(String, String, Column => Column)] = {
-    val minL = s.minLength.toVector.map(c =>
-      ("minLength", Messages.minLength(c), (x: Column) => length(x) >= c))
-    val maxL = s.maxLength.toVector.map(c =>
-      ("maxLength", Messages.maxLength(c), (x: Column) => length(x) <= c))
-    val pat = s.pattern.toVector.map(p =>
-      ("pattern", Messages.pattern(p), (x: Column) => x.rlike(p)))
-    val fmt = s.format.toVector.flatMap { name =>
-      if (Formats.unsupported.contains(name))
-        throw SpecError(s"""format "$name" is not implemented""")
-      if (name == "regex")
-        Vector(("format", Messages.format(name), (x: Column) => Formats.regexCompiles(x)))
-      else Formats.regexFor(name).map(re =>
-        ("format", Messages.format(name), (x: Column) => x.rlike(re))).toVector
-    }
-    val en = if (s.enumList.nonEmpty) {
-      val strs = s.enumList.collect { case JStr(x) => x }
-      Vector(("enum", Messages.enumMismatch,
-        (x: Column) => if (strs.isEmpty) lit(false) else x.isin(strs: _*)))
-    } else Vector.empty
-    minL ++ maxL ++ pat ++ fmt ++ en
-  }
-
-  private def stringChecks(s: StrSpec, n: VNode, mk: MkFn): Vector[CompiledCheck] = {
-    val sv = n.asStr
-    strKeywordPredicates(s).map { case (kw, msg, p) =>
-      mk(kw, msg, p(sv), sv, null, null)
-    } ++ compositeChecksM(s.composites, n, mk)
-  }
-
-  // -- number keywords ------------------------------------------------------
-
-  private def numberChecks(s: NumSpec, n: VNode, mk: MkFn): Vector[CompiledCheck] = {
-    val d = n.asDbl
-    val intChecks =
-      if (s.integer)
-        Vector(mk("type:integer", Messages.notInteger, d % 1 === 0, d.cast(StringType), null, null))
-      else Vector.empty
-    def cmp(kw: String, msg: String, ok: Column) = mk(kw, msg, ok, d.cast(StringType), null, null)
-    val mins = s.minimum.toVector.map(b => cmp("minimum", Messages.minimum(b), d >= b.toDouble))
-    val maxs = s.maximum.toVector.map(b => cmp("maximum", Messages.maximum(b), d <= b.toDouble))
-    val emins = s.exclusiveMinimum.toVector.map(b =>
-      cmp("exclusiveMinimum", Messages.exclusiveMinimum(b), d > b.toDouble))
-    val emaxs = s.exclusiveMaximum.toVector.map(b =>
-      cmp("exclusiveMaximum", Messages.exclusiveMaximum(b), d < b.toDouble))
-    val mults = s.multipleOf.toVector.map(b =>
-      cmp("multipleOf", Messages.multipleOf(b), d % b.toDouble === 0))
-    val ens = if (s.enumList.nonEmpty) {
-      val nums = s.enumList.collect { case x: JNum => x.toDouble }
-      Vector(cmp("enum", Messages.enumMismatch,
-        if (nums.isEmpty) lit(false) else d.isin(nums: _*)))
-    } else Vector.empty
-    intChecks ++ mins ++ maxs ++ emins ++ emaxs ++ mults ++ ens ++
-      compositeChecksM(s.composites, n, mk)
-  }
-
-  // -- generic / enum / const / composites ----------------------------------
-
-  private def genericChecks(g: GenericSpec, n: VNode, path: String, idp: String,
-                            present: Column, mk: (String, String, Column, Column, String, String, Column) => CompiledCheck): Vector[CompiledCheck] = {
-    def mk6(kw: String, msg: String, ok: Column, obs: Column, p: String, id: String) =
-      mk(kw, msg, ok, obs, p, id, present)
-    enumCheck(g.enumList, n, path, idp, mk6) ++
-      g.const.toVector.map { c =>
-        mk6("const", Messages.constMismatch(constRender(c)), constOk(c, n), n.json, path, null)
-      } ++ compositeChecks(g.composites, n, path, idp, mk6)
-  }
-
-  private def enumCheck(enumList: Vector[JsonVal], n: VNode, path: String,
-                        idp: String, mk: MkFn): Vector[CompiledCheck] =
-    if (enumList.isEmpty) Vector.empty
-    else Vector(mk("enum", Messages.enumMismatch, enumOk(enumList, n), n.json, path, null))
-
-  /** Runtime deep-equality membership across the whole JSON type lattice. */
-  private def enumOk(enumList: Vector[JsonVal], n: VNode): Column = {
-    val strs = enumList.collect { case JStr(s) => s }
-    val nums = enumList.collect { case x: JNum => x.toDouble }
-    val bools = enumList.collect { case JBool(b) => b }
-    val hasNull = enumList.contains(JNull)
-    val complex = enumList.collect {
-      case a: JArr => a.render
-      case o: JObj => o.render
-    }
-    val branches = Vector(
-      if (strs.nonEmpty) Some(n.isStr && n.asStr.isin(strs: _*)) else None,
-      if (nums.nonEmpty) Some(n.isNum && n.asDbl.isin(nums: _*)) else None,
-      if (bools.nonEmpty) Some(n.isBool && n.asBool.isin(bools: _*)) else None,
-      if (hasNull) Some(n.isJsonNull) else None,
-      if (complex.nonEmpty) Some((n.isArr || n.isObj) && n.json.isin(complex: _*)) else None
-    ).flatten
-    if (branches.isEmpty) lit(false) else branches.reduce(_ || _)
-  }
-
-  private def constOk(c: JsonVal, n: VNode): Column = c match {
-    case JStr(s)  => n.isStr && n.asStr === s
-    case x: JNum  => n.isNum && n.asDbl === x.toDouble
-    case JBool(b) => n.isBool && n.asBool === b
-    case JNull    => n.isJsonNull
-    case other    => n.json === other.render
-  }
-
-  private def constRender(c: JsonVal): String = c match {
-    case JStr(s) => s
-    case other   => other.render
-  }
-
-  private def compositeChecks(composites: Vector[Composite], n: VNode,
-                              path: String, idp: String, mk: MkFn): Vector[CompiledCheck] =
-    composites.map { c =>
-      val preds = c.children.map(ch => coalesce(predN(ch, n), lit(false)))
-      val ok =
-        if (preds.isEmpty) lit(c.kind == "allOf" || c.kind == "not")
-        else c.kind match {
-          case "allOf" => preds.reduce(_ && _)
-          case "anyOf" => preds.reduce(_ || _)
-          case "oneOf" => preds.map(_.cast(IntegerType)).reduce(_ + _) === 1
-          case "not"   => !preds.reduce(_ || _)
-        }
-      mk(c.kind, Messages.composite(c.kind), ok, n.json, path,
-         if (idp == null) null else s"$idp/${c.kind}")
-    }
-
-  private def compositeChecksM(composites: Vector[Composite], n: VNode,
-                               mk: MkFn): Vector[CompiledCheck] =
-    compositeChecks(composites, n, null, null, mk) // path/id filled by mk defaults
-
-  private def childPath(parent: String, prop: String): String =
-    if (parent == ".") s".$prop" else s"$parent.$prop"
-
-  private def childIndexPath(parent: String, i: Int): String =
-    if (parent == ".") s".[$i]" else s"$parent[$i]"
-
-  private def childIdp(idp: String, prop: String): String =
-    if (idp == ".") s".$prop" else s"$idp.$prop"
 }

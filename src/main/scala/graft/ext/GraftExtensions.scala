@@ -61,3 +61,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }))
   }
 }
+
+object GraftExtensions {
+
+  /** True when the active session resolves `fn`, i.e. has GraftExtensions
+    * installed: callers then emit the native expression instead of its
+    * composable fallback. */
+  def installed(fn: String): Boolean =
+    org.apache.spark.sql.SparkSession.getActiveSession.exists { s =>
+      try s.catalog.functionExists(fn)
+      catch { case _: Throwable => false }
+    }
+}

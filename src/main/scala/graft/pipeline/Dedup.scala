@@ -651,10 +651,7 @@ object Dedup {
     * fold. Both compute in ascending-index left-fold order over doubles —
     * bit-identical results, which the DuckDB oracles rely on. */
   private[graft] def dot(x: Column, y: Column): Column = {
-    val native = org.apache.spark.sql.SparkSession.getActiveSession.exists { s =>
-      try s.catalog.functionExists("graft_dot") catch { case _: Throwable => false }
-    }
-    if (native)
+    if (graft.ext.GraftExtensions.installed("graft_dot"))
       call_function("graft_dot", x.cast("array<double>"), y.cast("array<double>"))
     else
       aggregate(zip_with(x.cast("array<double>"), y.cast("array<double>"),

@@ -29,9 +29,10 @@ final case class GenericSpec(
 
 /** `type: object` (/root/reference/src/validator.cr:106-219). Field order of
   * the case class follows define-time consumption order; evaluation order is
-  * fixed by the compiler (required → dependentRequired → dependentSchemas →
-  * propertyNames → minProperties → maxProperties → properties →
-  * patternProperties → additionalProperties → enum → composites). */
+  * fixed by the keyword walk, `graft.compile.KeywordWalk` (required →
+  * dependentRequired → dependentSchemas → propertyNames → minProperties →
+  * maxProperties → properties → patternProperties → additionalProperties →
+  * enum → composites). */
 final case class ObjSpec(
     properties: Vector[(String, Spec)] = Vector.empty,
     patternProperties: Vector[(String, Spec)] = Vector.empty,

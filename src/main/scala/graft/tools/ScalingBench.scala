@@ -31,7 +31,7 @@ object ScalingBench {
       // r1 measured the nested-column vectorized reader degrading on
       // array<int> (13 s vs 1.6 s) and turned it OFF; re-measured in r3 at
       // 16 GiB driver heap it is 3× FASTER than the row-by-row reader
-      // (0.54 s vs 1.52 s on the 10⁷-row tokens scan, ReadProbe) — ON
+      // (0.54 s vs 1.52 s on a 10⁷-row tokens-only scan) — ON
       .config("spark.sql.parquet.enableNestedColumnVectorizedReader", "true")
       .config("spark.sql.adaptive.enabled", "true")
       // every AQE stage completion re-renders the plan description for the

@@ -46,6 +46,10 @@ class ArrayValidatorSpec extends AnyFunSuite {
       "Expected numeric value be greater than or equal to 20"))
   }
 
+  test("prefixItems errors carry the element path .[i] (node_context.cr:16-28)") {
+    assertErrorContext(errorsForValue(prefix, "array(10, 10)"), ".[1]")
+  }
+
   test("prefixItems with items:false closes the tuple") {
     assertSuccess(errorsForValue(prefixTuple, "array(1, 2, 3)"))
     assertError(errorsForValue(prefixTuple, "array(1, 2, 3, 4, 5)"),

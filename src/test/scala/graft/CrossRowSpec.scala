@@ -30,7 +30,7 @@ class CrossRowSpec extends AnyFunSuite {
   test("generator bytes are PINNED across code changes (cross-release signature)") {
     // order-insensitive full-row hash signature of sequences(50000, 16),
     // recorded before the overflow-safe mod-Vocab token rewrite and
-    // verified identical after it (tools/GenCheck) — scaling runs depend on
+    // verified identical after it (the same hash + count, below) — scaling runs depend on
     // "identical bytes at every parallelism AND every code revision"
     import org.apache.spark.sql.functions._
     val sig = SequenceGen.sequences(spark, 50000L, 16)

@@ -12,7 +12,8 @@ import graft.spec.SpecParser
 
 import Harness.spark
 
-/** Differential fuzz between the engine's two INDEPENDENT compilers.
+/** Differential fuzz between the engine's two independent column backends
+  * under one keyword walk.
   *
   * The typed-column compiler (`compile/Compiler.scala`) and the dynamic-JSON
   * variant compiler (`compile/VariantCompiler.scala`) implement the same
@@ -24,13 +25,16 @@ import Harness.spark
   * violations `(doc_id, path, constraint_id)` as validating the typed row
   * directly. Seeded random schemas × seeded random rows check that
   * equivalence over a far larger spec space than the hand-written parity
-  * suites — any disagreement is a bug in one of the compilers (null
-  * propagation, gating, presence semantics, numeric widening).
+  * suites — any disagreement is a bug in one of the backends (null
+  * propagation, gating, presence semantics, numeric widening). Both share
+  * `KeywordWalk`, so a walk bug (order, ids, paths, messages) shows the
+  * same in both and is invisible here; the golden `*ValidatorSpec`s and
+  * the driver oracles pin those.
   *
   * Compared: ordered (doc_id, path, constraint_id). Messages and `observed`
   * are NOT compared: items/contains subschema messages collapse differently
   * by design (the variant mode counts its runtime type gate as a second
-  * check — VariantCompiler scaladoc "Differences"), and observed formatting
+  * check — KeywordWalk scaladoc "Differences"), and observed formatting
   * follows the column type (int "5" vs variant double "5.0").
   *
   * Excluded from generation (documented representation divergences, each

@@ -74,6 +74,19 @@ class NumberValidatorSpec extends AnyFunSuite {
     assertError(errorsForValue(rangeExclusive, "100"), "Expected numeric value be less than 100")
   }
 
+  test("an empty range fails every bound, reported in keyword order (validator.cr:402-467)") {
+    // only the evaluation order decides the error order when bounds of both
+    // sides fail at once
+    assertErrors(errorsForValue(
+      """{"type":"number","minimum":10,"maximum":5,"exclusiveMinimum":10,"exclusiveMaximum":5,"multipleOf":2}""",
+      "7"), Vector(
+      "Expected numeric value be greater than or equal to 10",
+      "Expected numeric value be less than or equal to 5",
+      "Expected numeric value be greater than 10",
+      "Expected numeric value be less than 5",
+      "Expected numeric value to be multiple of 2"))
+  }
+
   test("enum: match succeeds, mismatch errors") {
     assertSuccess(errorsForValue(numEnum, "10"))
     assertError(errorsForValue(numEnum, "1000"), "Expected value to be equal to the enum")

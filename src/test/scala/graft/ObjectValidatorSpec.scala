@@ -2,6 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.compile.Compiler
+import graft.spec.SpecParser
+
 import Harness._
 
 /** Mirrors /root/reference/spec/object_validator_spec.cr over typed rows.
@@ -137,6 +140,29 @@ class ObjectValidatorSpec extends AnyFunSuite {
       "Expected numeric value to be an integer",
       "Expected value to be a boolean",
       "Expected value to be null"))
+  }
+
+  test("prefixItems under a property: error path .t[1]") {
+    val schema =
+      """{"type":"object","properties":{"t":{"type":"array",
+         "prefixItems":[{"type":"number"},{"type":"number","minimum":20}]}}}"""
+    val errs = errorsForRow(schema, df("select array(1, 5) as t"))
+    assertError(errs, "Expected numeric value be greater than or equal to 20")
+    assert(errs.head._2 == ".t[1]")
+  }
+
+  test("constraint ids and ranks: 0-based keyword order, ids by node path (validator.cr:112-219)") {
+    val schema =
+      """{"type":"object","required":["a"],"dependentRequired":{"a":["b"]},
+         "properties":{"a":{"type":"string","minLength":1}},
+         "enum":[{"a":"x"}],"anyOf":[{"type":"object"}]}"""
+    val checks = Compiler.compile(SpecParser.parse(schema), df("select 'x' as a, 'y' as b").schema)
+    assert(checks.map(c => (c.rank, c.id, c.path)) == Vector(
+      (0, "./required:a", "."),
+      (1, "./dependentRequired(a,b)", "."),
+      (2, ".a/minLength", ".a"),
+      (3, "./enum", "."),
+      (4, "./anyOf", ".")))
   }
 
   test("deeply nested: error path .person.identity.example (object_validator_spec.cr:431-437)") {

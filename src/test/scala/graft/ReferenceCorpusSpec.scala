@@ -11,12 +11,14 @@ import graft.spec.{SpecJson, SpecParser}
 import Harness.spark
 
 /** Whole-corpus parity: every schema fixture the reference tests against
-  * (all .json files under /root/reference/spec/fixtures) must parse, round-trip, and
-  * compile in BOTH engine modes; plus property-based agreement between the
-  * two independent compiler implementations. */
+  * (the .json files of `reference_fixtures/` on the test classpath, rebuilt
+  * from the schemas the validator specs inline — see its README.md) must
+  * parse, round-trip, and compile in BOTH engine modes; plus property-based
+  * agreement between the two independent column backends under one keyword
+  * walk. */
 class ReferenceCorpusSpec extends AnyFunSuite {
 
-  val fixtureDir = new File("/root/reference/spec/fixtures")
+  val fixtureDir = new File(getClass.getResource("/reference_fixtures").toURI)
 
   test("all 36 reference schema fixtures parse, round-trip, and compile (variant mode)") {
     val files = fixtureDir.listFiles().filter(_.getName.endsWith(".json")).sortBy(_.getName)
@@ -48,8 +50,9 @@ class ReferenceCorpusSpec extends AnyFunSuite {
     }
   }
 
-  /** The two compilers are independent implementations of the same
-    * semantics; on data expressible in both modes they must agree. */
+  /** The two column backends are independent implementations of the same
+    * semantics under one keyword walk; on data expressible in both modes
+    * they must agree. */
   test("typed-column and variant compilers agree on verdicts (property)") {
     import spark.implicits._
     val schema =

@@ -40,6 +40,17 @@ class StringValidatorSpec extends AnyFunSuite {
     assertError(errorsForValue(strEnum, "'purple'"), "Expected value to be equal to the enum")
   }
 
+  test("every failing keyword reports, in keyword order (validator.cr:338-397)") {
+    assertErrors(errorsForValue(
+      """{"type":"string","minLength":20,"maxLength":3,"pattern":"^x","format":"uuid","enum":["red"]}""",
+      "'not-a-uuid'"), Vector(
+      "Expected string to have a minimum length of 20",
+      "Expected string to have a maximum length of 3",
+      "Expected string to match pattern /^x/",
+      """Expected string to match format "uuid"""",
+      "Expected value to be equal to the enum"))
+  }
+
   test("format uuid (the one format the reference wires, validator.cr:370-372)") {
     assertSuccess(errorsForValue(uuidFormat, "'123e4567-e89b-12d3-a456-426614174000'"))
     assertError(errorsForValue(uuidFormat, "'not-a-uuid'"),
