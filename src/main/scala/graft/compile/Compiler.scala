@@ -117,10 +117,22 @@ object Compiler {
     protected def comparable(n: Loc): Column = n.value
     // hottest expression of the token suite: the element-domain forall is
     // a CodegenFallback HOF; use the native codegen'd range loop when the
-    // subschema is a pure integral range and graft extensions are active
-    // (identical semantics — ExtSpec pins parity incl. null elements)
+    // subschema is a pure range (`rangeItems`) over an integral element
+    // type, every bound is a whole valid long (fractional bounds compare as
+    // doubles) and graft extensions are active; `integer:true` is
+    // statically satisfied on integral columns (identical semantics —
+    // ExtSpec pins parity incl. null elements)
     override protected def allItems(n: Loc, sub: Spec): Option[Column] =
-      nativeRangeForall(sub, n.value, elemType(n))
+      rangeItems(sub).filter { r =>
+        Seq(ByteType, ShortType, IntegerType, LongType).contains(elemType(n)) &&
+          r.bounds.forall(b => b.isWhole && b.isValidLong) &&
+          graft.ext.GraftExtensions.installed("graft_all_in_range")
+      }.map { r =>
+        val (lo, hi) = r.tightest(_.toLong, java.lang.Long.compare)
+        val (l, ls) = lo.getOrElse((Long.MinValue, false))
+        val (h, hs) = hi.getOrElse((Long.MaxValue, false))
+        call_function("graft_all_in_range", n.value, lit(l), lit(h), lit(ls), lit(hs))
+      }
 
     protected def string(n: Loc): Scalar = Scalar(n.value, n.value, json(n))
     protected def number(n: Loc): Scalar = Scalar(n.value, n.value, json(n))
@@ -182,37 +194,6 @@ object Compiler {
     case BoolSpec       => dt == BooleanType
     case NullSpec       => true
     case _: GenericSpec => true
-  }
-
-  /** Native `graft_all_in_range` fast path for the commonest 100-TB items
-    * shape — a pure integral range over an integral element type (the
-    * north-star token-domain check). Equivalence conditions (else None →
-    * composable `forall`): no multipleOf/enum/composites (those need the
-    * general pred), every present bound a whole valid long (fractional
-    * bounds compare as doubles), and the graft extensions registered in the
-    * active session. `integer:true` is statically satisfied on integral
-    * columns, and multiple bounds of one side collapse to the tightest
-    * (strict wins ties). */
-  private def nativeRangeForall(sub: Spec, v: Column, elemType: DataType): Option[Column] = sub match {
-    case n: NumSpec
-        if (elemType == ByteType || elemType == ShortType ||
-          elemType == IntegerType || elemType == LongType) &&
-          n.multipleOf.isEmpty && n.enumList.isEmpty && n.composites.isEmpty &&
-          Seq(n.minimum, n.maximum, n.exclusiveMinimum, n.exclusiveMaximum)
-            .forall(_.forall(b => b.isWhole && b.isValidLong)) &&
-          graft.ext.GraftExtensions.installed("graft_all_in_range") =>
-      val (lo, ls) = (n.minimum.map(b => (b.toLong, false)) ++
-          n.exclusiveMinimum.map(b => (b.toLong, true)))
-        .foldLeft((Long.MinValue, false)) { case ((bl, bs), (xl, xs)) =>
-          if (xl > bl || (xl == bl && xs)) (xl, xs) else (bl, bs)
-        }
-      val (hi, hs) = (n.maximum.map(b => (b.toLong, false)) ++
-          n.exclusiveMaximum.map(b => (b.toLong, true)))
-        .foldLeft((Long.MaxValue, false)) { case ((bh, bs), (xh, xs)) =>
-          if (xh < bh || (xh == bh && xs)) (xh, xs) else (bh, bs)
-        }
-      Some(call_function("graft_all_in_range", v, lit(lo), lit(hi), lit(ls), lit(hs)))
-    case _ => None
   }
 
   private def isFractional(dt: DataType): Boolean = dt match {

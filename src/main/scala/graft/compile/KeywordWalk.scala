@@ -382,7 +382,7 @@ private[compile] abstract class KeywordWalk[N] {
   }
 }
 
-private[compile] object KeywordWalk {
+private[graft] object KeywordWalk {
 
   /** Where the walk stands: the value's path and id prefix, and the
     * condition under which it is present. */
@@ -446,6 +446,39 @@ private[compile] object KeywordWalk {
       (if (s.enumList.isEmpty) Vector.empty
        else Vector(StrKeyword("enum", Messages.enumMismatch,
          x => if (strs.isEmpty) lit(false) else x.isin(strs: _*), strs.contains)))
+  }
+
+  /** An `items` subschema that is a pure numeric range: a `NumSpec` with
+    * no multipleOf, enum or composites, as its `integer` flag and the
+    * `(bound, strict)` pairs of each side. Its element predicate is then a
+    * gate, an optional integrality test and two bounds, which both
+    * backends can hand to a native range loop (each adds its own
+    * conditions: element type, bound form, the session's extension). */
+  final case class RangeItems(integer: Boolean, lower: Vector[(BigDecimal, Boolean)],
+                              upper: Vector[(BigDecimal, Boolean)]) {
+    def bounds: Vector[BigDecimal] = (lower ++ upper).map(_._1)
+
+    /** Each side's tightest bound as `(bound, strict)`, None when the side
+      * has none. Bounds are compared after `conv`, in the form the checks
+      * compare them (two decimals can meet as one double), by `cmp`; strict
+      * wins a tie. The conjunction of a side's checks is exactly this one. */
+    def tightest[T](conv: BigDecimal => T, cmp: (T, T) => Int): (Option[(T, Boolean)], Option[(T, Boolean)]) = {
+      def fold(side: Vector[(BigDecimal, Boolean)], tighter: Int => Boolean) =
+        side.map { case (b, strict) => (conv(b), strict) }.reduceOption { (acc, x) =>
+          val c = cmp(x._1, acc._1)
+          if (tighter(c) || (c == 0 && x._2)) x else acc
+        }
+      (fold(lower, _ > 0), fold(upper, _ < 0))
+    }
+  }
+
+  /** `sub` as a [[RangeItems]], when it is a pure numeric range. */
+  def rangeItems(sub: Spec): Option[RangeItems] = sub match {
+    case n: NumSpec if n.multipleOf.isEmpty && n.enumList.isEmpty && n.composites.isEmpty =>
+      Some(RangeItems(n.integer,
+        n.minimum.map((_, false)).toVector ++ n.exclusiveMinimum.map((_, true)),
+        n.maximum.map((_, false)).toVector ++ n.exclusiveMaximum.map((_, true))))
+    case _ => None
   }
 
   private def gateKeyword(spec: Spec): (String, String) = spec match {

@@ -2,7 +2,8 @@ package graft.compile
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.types.{DoubleType, StringType}
 
 import graft.spec._
 
@@ -27,7 +28,10 @@ import graft.spec._
   * reference (CollapseProject keeps expensive multi-referenced projections
   * un-inlined), so per-row cost is one parse + one type-derivation +
   * one extraction per value node, not per check. Lambda-scoped nodes (array
-  * elements, runtime object keys) cannot be projected and stay inline.
+  * elements, runtime object keys) cannot be projected and stay inline. A
+  * pure range `items` subschema (the token-domain check) compiles to the
+  * native loop `graft_variant_all_in_range` instead, which reads each
+  * element's kind and number once, inside codegen.
   */
 object VariantCompiler {
 
@@ -149,6 +153,20 @@ object VariantCompiler {
     protected def nullElement(n: VNode): VNode = inlineNode(parse_json(lit("null")))
     protected def elementObserved(n: VNode, el: Column): Column = n.json
     protected def comparable(n: VNode): Column = transform(n.asArr, e => to_json(e))
+    // the element-domain forall over JSON is a CodegenFallback HOF that
+    // re-derives each element's kind and double per check; a pure range
+    // subschema (`rangeItems`) runs as the native codegen'd loop instead
+    // when graft extensions are active (identical semantics — ExtSpec pins
+    // parity over JSON numbers, non-numbers, NaN and ±Infinity)
+    override protected def allItems(n: VNode, sub: Spec): Option[Column] =
+      rangeItems(sub).filter(_ => graft.ext.GraftExtensions.installed("graft_variant_all_in_range"))
+        .map { r =>
+          val (lo, hi) = r.tightest(_.toDouble, SQLOrderingUtil.compareDoubles)
+          def side(b: Option[(Double, Boolean)]): Column =
+            b.fold(lit(null).cast(DoubleType))(x => lit(x._1))
+          call_function("graft_variant_all_in_range", n.asArr, side(lo), side(hi),
+            lit(lo.exists(_._2)), lit(hi.exists(_._2)), lit(r.integer))
+        }
 
     protected def string(n: VNode): Scalar = Scalar(n.asStr, n.asStr, n.asStr)
     protected def number(n: VNode): Scalar = {

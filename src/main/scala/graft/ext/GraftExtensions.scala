@@ -59,6 +59,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.size == 5, "graft_all_in_range takes exactly 5 arguments")
         ForallInRange(children(0), children(1), children(2), children(3), children(4))
       }))
+    ext.injectFunction((
+      FunctionIdentifier("graft_variant_all_in_range"),
+      new ExpressionInfo(classOf[VariantForallInRange].getName, "graft_variant_all_in_range"),
+      (children: Seq[Expression]) => {
+        require(children.size == 6, "graft_variant_all_in_range takes exactly 6 arguments")
+        VariantForallInRange(children(0), children(1), children(2), children(3), children(4),
+          children(5))
+      }))
   }
 }
 

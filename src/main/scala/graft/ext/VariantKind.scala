@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType, VariantType}
+import org.apache.spark.sql.types.{DataType, Decimal, IntegerType, VariantType}
 import org.apache.spark.unsafe.types.VariantVal
 
 /** Static helper shared by interpreted eval and generated code. */
@@ -22,6 +22,23 @@ object GraftVariantOps {
       case Type.BOOLEAN => Boolean
       case Type.NULL => Null
       case _ => Other
+    }
+  }
+
+  /** A `Number`-kind value as a double, converted exactly as
+    * `try_variant_get(v, '$', 'double')` converts it: Spark reads the
+    * scalar as a LONG, DOUBLE, FLOAT or DECIMAL literal and casts that to
+    * double (a decimal through `Decimal.toDouble`). */
+  def toDouble(v: VariantVal): Double = {
+    import org.apache.spark.types.variant.VariantUtil
+    import org.apache.spark.types.variant.VariantUtil.Type
+    val b = v.getValue
+    VariantUtil.getType(b, 0) match {
+      case Type.LONG => VariantUtil.getLong(b, 0).toDouble
+      case Type.DOUBLE => VariantUtil.getDouble(b, 0)
+      case Type.FLOAT => VariantUtil.getFloat(b, 0).toDouble
+      case Type.DECIMAL => Decimal(VariantUtil.getDecimal(b, 0)).toDouble
+      case other => throw new IllegalArgumentException(s"not a number: $other")
     }
   }
 }

@@ -421,7 +421,7 @@ class DifferentialFuzzSpec extends AnyFunSuite {
 
   test("items bound strictness: directed boundary corpus (native range fast path)") {
     // Found by mutation analysis: dropping the exclusive-LOWER strictness
-    // flag in Compiler.nativeRangeForall's graft_all_in_range wiring survived
+    // flag in the typed backend's graft_all_in_range wiring survived
     // the random corpus (elements rarely land exactly on an exclusive bound
     // of a native-eligible items schema) and every other test (ExtSpec pins
     // the expression and the exclusiveMaximum wiring, not exclusiveMinimum).

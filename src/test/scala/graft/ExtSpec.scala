@@ -110,6 +110,169 @@ class ExtSpec extends AnyFunSuite {
     assert(counts(".tokens/items") == 40L, counts.toString)
   }
 
+  /** Every pure-range `items` shape the variant walk can hand to the native
+    * loop: each lower side × each upper side × `integer` off/on. Sides
+    * cover absent, inclusive, strict, two bounds tied (strict wins), two
+    * bounds where either is the tighter, two decimals that meet as one
+    * double, and an infinite bound. */
+  private def rangeSpecs: Seq[graft.spec.NumSpec] = {
+    import graft.spec.NumSpec
+    type Side = (Option[BigDecimal], Option[BigDecimal]) // (inclusive, strict)
+    val lowers: Seq[Side] = Seq(
+      (None, None), (Some(BigDecimal(0)), None), (None, Some(BigDecimal(0))),
+      (Some(BigDecimal(0)), Some(BigDecimal(0))), (Some(BigDecimal(-1)), Some(BigDecimal("0.5"))),
+      (Some(BigDecimal("0.5")), Some(BigDecimal(-1))),
+      (Some(BigDecimal("0.10000000000000000001")), Some(BigDecimal("0.1"))))
+    val uppers: Seq[Side] = Seq(
+      (None, None), (Some(BigDecimal(50000)), None), (None, Some(BigDecimal(50000))),
+      (Some(BigDecimal(50000)), Some(BigDecimal(50000))),
+      (Some(BigDecimal("49999.5")), Some(BigDecimal(60000))),
+      (Some(BigDecimal(60000)), Some(BigDecimal(49999))),
+      (None, Some(BigDecimal("1e400"))))
+    for (lo <- lowers; hi <- uppers; integer <- Seq(false, true))
+      yield NumSpec(integer = integer, minimum = lo._1, exclusiveMinimum = lo._2,
+        maximum = hi._1, exclusiveMaximum = hi._2)
+  }
+
+  test("graft_variant_all_in_range matches the variant walk's forall+pred on every edge") {
+    import graft.compile.VariantCompiler
+    assert(spark.catalog.functionExists("graft_variant_all_in_range"))
+    val edges = Vector("0", "49999", "50000", "-1", "0.5", "1.0", "-0.0", "0.1", "3",
+      "49999.5", "49999.999999999999999999", "0.000000000000000000000000000001",
+      "9007199254740993", "-9223372036854775808", "12345678901234567890123456789012345678",
+      "1e400", "-1e400", "1e-400", "1E2", "60000", "\"7\"", "true", "false", "null", "[]",
+      "{}", "[1]", "{\"a\":1}")
+    val rnd = new scala.util.Random(5)
+    def element(): String = rnd.nextInt(10) match {
+      case x if x < 5 => rnd.between(-3, 50004).toString
+      case 5 => (rnd.between(-30, 500030) / 10.0).toString
+      case _ => edges(rnd.nextInt(edges.size))
+    }
+    val texts: Seq[String] =
+      edges.map(e => s"[$e]") ++ Seq("[]", "[0,49999]", "[0,50000]", "[null,1]", "[1,\"2\"]") ++
+        Seq.fill(300)(Seq.fill(rnd.nextInt(6))(element()).mkString("[", ",", "]")) :+ null
+    val fromJson = texts.zipWithIndex.toDF("j", "id")
+      .select(col("id"), col("j"), try_variant_get(parse_json(col("j")), "$", "array<variant>").as("a"))
+    // arrays JSON text cannot express: a SQL-null element, NaN and
+    // ±Infinity doubles (parse_json reads 1e400 as Infinity, never NaN),
+    // and FLOAT numbers
+    val built = spark.sql(
+      """SELECT id, 'built' AS j, a FROM VALUES
+        |  (-1, array(parse_json('1'), cast(null as variant))),
+        |  (-2, array(cast(cast('NaN' as double) as variant))),
+        |  (-3, array(cast(cast('Infinity' as double) as variant))),
+        |  (-4, array(cast(cast('-Infinity' as double) as variant))),
+        |  (-5, array(cast(cast(2.5 as float) as variant), cast(7 as variant))),
+        |  (-6, array(cast(cast('NaN' as double) as variant), cast(cast(1.0 as double) as variant))),
+        |  (-7, array(cast(cast(0.1 as float) as variant)))
+        |  AS t(id, a)""".stripMargin)
+    val df = fromJson.unionByName(built)
+    val specs = rangeSpecs
+    def arg(b: Option[(Double, Boolean)]) = b.fold(lit(null).cast("double"))(x => lit(x._1))
+    val native = specs.map { sub =>
+      val (lo, hi) = graft.compile.KeywordWalk.rangeItems(sub).get
+        .tightest(_.toDouble, org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles)
+      call_function("graft_variant_all_in_range", col("a"), arg(lo), arg(hi),
+        lit(lo.exists(_._2)), lit(hi.exists(_._2)), lit(sub.integer))
+    }
+    // the walk's element predicate: a root-value compile of the items
+    // subschema over the element is exactly `pred(sub, element)` (the
+    // variant gate ignores nullFailsGate), conjoined over its checks
+    val hof = specs.map(sub =>
+      forall(col("a"), e => VariantCompiler.compile(sub, e).map(_.pass).reduce(_ && _)))
+    // the same check as the walk emits it (bounds folded and wired by
+    // `VariantCompiler`): the `items` check of an array spec over the JSON
+    // rows, whose wrapper passes the non-array (null) row
+    val walked = specs.map { sub =>
+      val items = VariantCompiler.compile(graft.spec.ArrSpec(items = Some(sub)), parse_json(col("j")))
+        .find(_.keyword == "items").get.pass
+      assert(items.toString.contains("graft_variant_all_in_range"), items.toString)
+      items
+    }
+    // both evaluation paths: the generated loop (whole-stage codegen, no
+    // silent fallback to eval; the local input is not folded away) and
+    // the interpreted eval. The forall is CodegenFallback, which keeps its
+    // whole projection out of whole-stage codegen, so each side is its
+    // own query, matched by row id.
+    val modes = Seq(
+      "generated" -> Map("spark.sql.optimizer.excludedRules" ->
+        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation",
+        "spark.sql.codegen.fallback" -> "false", "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+      "interpreted" -> Map("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for ((mode, conf) <- modes) {
+      val before = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val nq = df.select(col("id") +: col("j") +: native: _*)
+        if (mode == "generated")
+          assert(nq.queryExecution.executedPlan.toString.linesIterator
+            .exists(l => l.contains("*(") && l.contains("graft_variant_all_in_range")),
+            "not whole-stage codegen'd:\n" + nq.queryExecution.executedPlan)
+        val ns = nq.collect().map(r => r.getInt(0) -> r).toMap
+        val hs = df.select(col("id") +: hof: _*).collect().map(r => r.getInt(0) -> r).toMap
+        assert(ns.size == texts.size + 7 && hs.keySet == ns.keySet)
+        var falses, nulls = 0
+        for ((id, n) <- ns; k <- specs.indices) {
+          val (nv, hv) = (n.get(2 + k), hs(id).get(1 + k))
+          assert(nv == hv, s"$mode: ${specs(k)} on ${n.getString(1)} (row $id): native=$nv forall=$hv")
+          if (nv == false) falses += 1
+          if (nv == null) nulls += 1
+        }
+        assert(falses > ns.size * specs.size / 4 && nulls == specs.size,
+          s"vacuous corpus: $falses false, $nulls null")
+        for (r <- fromJson.select(col("id") +: walked: _*).collect(); k <- specs.indices) {
+          val expected = Option(hs(r.getInt(0)).get(1 + k)).getOrElse(true)
+          assert(r.get(1 + k) == expected,
+            s"$mode: walked ${specs(k)} on ${ns(r.getInt(0)).getString(1)}: ${r.get(1 + k)} vs $expected")
+        }
+      } finally before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
+
+  test("the variant walk's pure-range items compiles to graft_variant_all_in_range") {
+    import graft.data.SequenceGen
+    import graft.run.Validator
+    import graft.spec.SpecParser
+    // json_runtime-shaped rows: some with a fractional token, some with
+    // n_tok as a string, plus the generator's out-of-domain tokens
+    val seqs = SequenceGen.sequences(spark, 3000, numParts = 4)
+    val d = pmod(xxhash64(col("doc_id"), lit(5)), lit(100))
+    val text = concat(lit("{\"doc_id\":\""), col("doc_id"), lit("\",\"tokens\":["),
+      array_join(col("tokens"), ","), when(d < 4, lit(",0.5")).otherwise(lit("")),
+      lit("],\"n_tok\":"),
+      when(d >= 4 && d < 8, format_string("\"%d\"", col("n_tok")))
+        .otherwise(col("n_tok").cast("string")),
+      when(col("source").isNull, lit(""))
+        .otherwise(concat(lit(",\"source\":\""), col("source"), lit("\""))),
+      lit("}"))
+    val df = seqs.select(col("doc_id"), text.as("json"), col("part"))
+    val fast = Validator.validateJson(df, SpecParser.parse(SequenceGen.SeqSpecJson), "json")
+    for (frame <- Seq(fast.verdicts, fast.violations)) {
+      val p = frame.queryExecution.executedPlan.toString
+      assert(p.contains("graft_variant_all_in_range"),
+        "items range check did not use the native expression:\n" + p)
+      assert(!p.contains("forall("), "interpreted forall still present:\n" + p)
+    }
+    // multipleOf:1 says nothing `integer` does not, but keeps the items
+    // subschema off the native path: the composable forall decides instead
+    val composableJson = SequenceGen.SeqSpecJson.replace(
+      s""""exclusiveMaximum":${SequenceGen.Vocab}}""",
+      s""""exclusiveMaximum":${SequenceGen.Vocab},"multipleOf":1}""")
+    assert(composableJson != SequenceGen.SeqSpecJson)
+    val composable = Validator.validateJson(df, SpecParser.parse(composableJson), "json")
+    assert(composable.violations.queryExecution.executedPlan.toString.contains("forall("))
+    def sorted(f: org.apache.spark.sql.DataFrame) = f.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(sorted(fast.verdicts) == sorted(composable.verdicts))
+    assert(sorted(fast.violations) == sorted(composable.violations))
+    val items = fast.verdicts.where(col("constraint_id") === ".tokens/items")
+      .agg(sum("violations")).collect()(0).getLong(0)
+    assert(items > 100, s"only $items .tokens/items violations — vacuous comparison")
+  }
+
   test("graft_dot runs inside whole-stage codegen (the HOF form cannot)") {
     // non-literal input so ConvertToLocalRelation can't fold the projection
     val df = spark.range(10)
