@@ -179,14 +179,13 @@ object PipelineQueries {
           countDistinct(col("lang")).as("lang_distinct"),
           sum(col("text").isNull.cast("long")).as("text_nulls"))
         .orderBy("part")),
-    // the REAL Metrics.partitionStats path (HLL++ / GK / t-digest state
+    // the REAL Metrics.partitionStats path (HLL++ and GK estimates
     // included — VERDICT r2 #7): exact columns oracled exactly; each sketch
     // column becomes a VERIFIABLE CLAIM the oracle pins to true — HLL++
     // within 3×rsd of the exact distinct (default rsd 0.05 is a STANDARD
     // DEVIATION — a 1σ bound fails ~1/3 of the time and did at sf0.1's
     // 250-distinct partitions; Spark's HLL++ has no exact sparse mode),
-    // GK q50 between the exact p45/p55 (rank error ≤ 1e-4),
-    // t-digest total weight == non-null count (merge-invariant of the state)
+    // GK q50 between the exact p45/p55 (rank error ≤ 1e-4)
     "x_metrics_sketch" -> ((s, dir) => {
       val df = docs(s, dir).withColumn("part", col("source"))
       val stats = graft.stats.Metrics.partitionStats(df, "part", "doc_id", "n_chars", "lang")
@@ -194,8 +193,7 @@ object PipelineQueries {
         countDistinct(col("doc_id")).as("_ed"),
         countDistinct(col("lang")).as("_el"),
         expr("percentile(n_chars, 0.45)").as("_p45"),
-        expr("percentile(n_chars, 0.55)").as("_p55"),
-        sum(col("n_chars").isNotNull.cast("long")).as("_nn"))
+        expr("percentile(n_chars, 0.55)").as("_p55"))
       stats.join(exact, "part")
         .select(
           col("part"), col("total"),
@@ -207,9 +205,7 @@ object PipelineQueries {
           (abs(col("lang_approx_distinct") - col("_el")) <= greatest(col("_el") * 0.15, lit(2.0)))
             .as("hll_cat_ok"),
           element_at(col("n_chars_quantiles"), 1).between(col("_p45"), col("_p55"))
-            .as("gk_q50_ok"),
-          (aggregate(col("n_chars_tdigest.weights"), lit(0.0d), (a, b) => a + b)
-            === col("_nn").cast("double")).as("td_weight_ok"))
+            .as("gk_q50_ok"))
         .orderBy("part")
     }),
 
@@ -794,7 +790,7 @@ object PipelineQueries {
                 count(*) FILTER (WHERE doc_id IS NULL) AS doc_id_nulls,
                 count(*) FILTER (WHERE lang IS NULL) AS lang_nulls,
                 true AS hll_key_ok, true AS hll_cat_ok,
-                true AS gk_q50_ok, true AS td_weight_ok
+                true AS gk_q50_ok
          FROM documents GROUP BY 1 ORDER BY part""",
     "p_exact_dup_groups" ->
       s"""SELECT $contentKeySql AS content_key, count(*) AS cnt,

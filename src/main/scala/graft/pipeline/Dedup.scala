@@ -63,7 +63,14 @@ object Dedup {
     * over the line-hash partition (count + join-back fused — no separate
     * groupBy + join), then the per-doc rollup re-shuffles on doc_id.
     * Lines travel as md5 hex (collision-free at corpus scale), never as
-    * text. The ppm column is the hash-stable integer-share idiom. */
+    * text. The ppm column is the hash-stable integer-share idiom.
+    *
+    * NULLs: `md5` never sees a NULL line (a NULL text splits to NULL, which
+    * `explode_outer` turns into the one NULL line the filter drops), so a
+    * NULL-text document is absent. A NULL-doc_id document's lines count
+    * toward every line's document frequency, but it gets no row: several
+    * such documents would otherwise fold into one row describing none of
+    * them. */
   def lineDupStats(df: DataFrame, text: Column, docId: Column,
                    minDf: Int = 2): DataFrame = {
     require(minDf >= 2, s"minDf below 2 flags every line, got $minDf")
@@ -76,6 +83,7 @@ object Dedup {
       .select(col("doc_id"), md5(col("line")).as("_lh"))
     val byLine = org.apache.spark.sql.expressions.Window.partitionBy(col("_lh"))
     docLine.withColumn("_df", count(lit(1)).over(byLine))
+      .where(col("doc_id").isNotNull)
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("lines"),
         sum((col("_df") >= minDf).cast("long")).as("dup_lines"))
@@ -546,7 +554,10 @@ object Dedup {
   }
 
   /** Small-input convenience — inlines word hashes (re-evaluated per bit,
-    * ×64); at scale use `simhashByKey`. */
+    * ×64); at scale use `simhashByKey`. `xxhash64` never sees a NULL word:
+    * `words` of a NULL text is a NULL array, whose bit sums are NULL and
+    * fold to 0 bits, so a NULL text hashes to 0 — the same value as a
+    * text with no words, and as `withSimhash` and `simhashByKey` give. */
   def simhash(text: Column, bits: Int = 64): Column =
     simhashFromHashes(transform(TextAnalysis.words(text), w => xxhash64(w)), bits)
 

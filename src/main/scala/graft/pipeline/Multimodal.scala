@@ -38,6 +38,8 @@ object Multimodal {
   def syntheticMedia(spark: SparkSession, n: Long): Dataset[MediaRow] = {
     import spark.implicits._
     spark.range(n).map { id =>
+      // `id` comes from spark.range and is never NULL, so the boxed hash
+      // input is always a real value
       val h = java.util.Objects.hash(42L, id).toLong
       val mediaType = (id % 3) match {
         case 0 => "image"; case 1 => "audio"; case _ => "video"

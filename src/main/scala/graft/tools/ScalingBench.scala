@@ -9,8 +9,8 @@ import org.apache.spark.sql.SparkSession
   * Robustness: this sandbox is a shared VM with visible noisy-neighbor
   * jitter, so runs are INTERLEAVED (N, 4N, N, 4N, …) and the minimum wall
   * per level is used — min-of-reps is unbiased under external slowdowns.
-  * `CpuProbe` measures the machine's own scaling ceiling (SMT: 32 logical /
-  * 16 physical cores) to contextualize the pair choice.
+  * The machine's own CPU speed per run is `env.cpu_calib_s` in perfbench's
+  * traced metrics.
   *
   * Usage: `sbt "runMain graft.tools.ScalingBench [rows] [N] [reps]"`.
   */

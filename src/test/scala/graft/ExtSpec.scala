@@ -56,6 +56,40 @@ class ExtSpec extends AnyFunSuite {
       .collect()(0).isNullAt(0))
   }
 
+  /** Runs `body(mode)` once per evaluation path of the native expressions,
+    * then restores the session conf:
+    *  - "generated": whole-stage codegen with no silent fallback to eval,
+    *    and ConvertToLocalRelation excluded so a local input is not folded
+    *    away at plan time through `eval`;
+    *  - "interpreted": the expressions' `eval`.
+    * A CodegenFallback expression (`forall`) keeps its whole projection out
+    * of whole-stage codegen, so a native-vs-forall comparison runs each side
+    * as its own query, matched by row id. */
+  private def inBothModes(body: String => Unit): Unit = {
+    val modes = Seq(
+      "generated" -> Map("spark.sql.optimizer.excludedRules" ->
+        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation",
+        "spark.sql.codegen.fallback" -> "false", "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+      "interpreted" -> Map("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for ((mode, conf) <- modes) {
+      val before = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body(mode)
+      finally before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
+
+  /** In "generated" mode, `fn` must sit in a whole-stage codegen span. */
+  private def assertCodegen(mode: String, df: org.apache.spark.sql.DataFrame, fn: String): Unit =
+    if (mode == "generated")
+      assert(df.queryExecution.executedPlan.toString.linesIterator
+        .exists(l => l.contains("*(") && l.contains(fn)),
+        s"$fn not whole-stage codegen'd:\n" + df.queryExecution.executedPlan)
+
   test("graft_all_in_range matches the forall+pred composition on every edge") {
     assert(spark.catalog.functionExists("graft_all_in_range"))
     val vocab = 32000L
@@ -68,24 +102,43 @@ class ExtSpec extends AnyFunSuite {
           Some(Seq(Some(vocab))), Some(Seq(Some(-1L))), Some(Seq(None)),
           Some(Seq(Some(0L), None, Some(5L))), Some(Seq(Some(Long.MinValue))),
           Some(Seq(Some(Long.MaxValue))))
-    val df = data.toDF("a")
-    def hof(lo: Long, hi: Long) =
-      forall(col("a"), e => e.isNotNull && e >= lo && e < hi)
-    def native(lo: Long, hi: Long) =
-      call_function("graft_all_in_range", col("a"), lit(lo), lit(hi), lit(false), lit(true))
-    val rows = df.select(native(0L, vocab).as("n"), hof(0L, vocab).as("h")).collect()
-    rows.zip(data).foreach { case (r, in) =>
-      assert(r.isNullAt(0) == r.isNullAt(1) &&
-        (r.isNullAt(0) || r.getBoolean(0) == r.getBoolean(1)),
-        s"mismatch on $in: native=${r.get(0)} hof=${r.get(1)}")
+    val df = data.zipWithIndex.toDF("a", "id")
+    // each bound side inclusive and strict, plus the open lower side
+    // (MinValue sentinel) with an inclusive upper
+    val bounds = Seq((0L, vocab, false, true), (0L, vocab, true, false),
+      (0L, vocab - 1, false, false), (-1L, vocab, true, true), (Long.MinValue, 10L, false, false))
+    val native = bounds.map { case (lo, hi, ls, hs) =>
+      call_function("graft_all_in_range", col("a"), lit(lo), lit(hi), lit(ls), lit(hs))
     }
-    // inclusive upper + open lower (MinValue sentinel) over int arrays
-    val ints = Seq(Seq(1, 2, 3), Seq(0, 10), Seq(-5)).toDF("a")
-    val r2 = ints.select(
-      call_function("graft_all_in_range", col("a"),
-        lit(Long.MinValue), lit(10L), lit(false), lit(false)).as("n"),
-      forall(col("a"), e => e.isNotNull && e <= 10).as("h")).collect()
-    r2.foreach(r => assert(r.getBoolean(0) == r.getBoolean(1)))
+    val hof = bounds.map { case (lo, hi, ls, hs) =>
+      forall(col("a"), e => e.isNotNull && (if (ls) e > lo else e >= lo) &&
+        (if (hs) e < hi else e <= hi))
+    }
+    inBothModes { mode =>
+      val nq = df.select(col("id") +: native: _*)
+      assertCodegen(mode, nq, "graft_all_in_range")
+      val ns = nq.collect().map(r => r.getInt(0) -> r).toMap
+      val hs = df.select(col("id") +: hof: _*).collect().map(r => r.getInt(0) -> r).toMap
+      assert(ns.size == data.size && hs.keySet == ns.keySet)
+      var falses = 0
+      for ((id, n) <- ns; k <- bounds.indices) {
+        val (nv, hv) = (n.get(1 + k), hs(id).get(1 + k))
+        assert(nv == hv, s"$mode: ${bounds(k)} on ${data(id)}: native=$nv forall=$hv")
+        if (nv == false) falses += 1
+      }
+      assert(falses > 0 && falses < ns.size * bounds.size, s"vacuous corpus: $falses false")
+    }
+    // narrower integral element types go through their own getter
+    val ints = Seq(Seq(1, 2, 3), Seq(0, 10), Seq(-5), Seq(11)).zipWithIndex.toDF("a", "id")
+    inBothModes { mode =>
+      val nq = ints.select(col("id"), call_function("graft_all_in_range", col("a"),
+        lit(Long.MinValue), lit(10L), lit(false), lit(false)))
+      assertCodegen(mode, nq, "graft_all_in_range")
+      val hs = ints.select(col("id"), forall(col("a"), e => e.isNotNull && e <= 10))
+        .collect().map(r => r.getInt(0) -> r.getBoolean(1)).toMap
+      val ns = nq.collect().map(r => r.getInt(0) -> r.getBoolean(1)).toMap
+      assert(ns == hs && ns.values.toSet == Set(true, false), s"$mode: $ns vs $hs")
+    }
   }
 
   test("typed items range-check compiles to graft_all_in_range and stays in codegen") {
@@ -189,46 +242,25 @@ class ExtSpec extends AnyFunSuite {
       assert(items.toString.contains("graft_variant_all_in_range"), items.toString)
       items
     }
-    // both evaluation paths: the generated loop (whole-stage codegen, no
-    // silent fallback to eval; the local input is not folded away) and
-    // the interpreted eval. The forall is CodegenFallback, which keeps its
-    // whole projection out of whole-stage codegen, so each side is its
-    // own query, matched by row id.
-    val modes = Seq(
-      "generated" -> Map("spark.sql.optimizer.excludedRules" ->
-        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation",
-        "spark.sql.codegen.fallback" -> "false", "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
-      "interpreted" -> Map("spark.sql.codegen.wholeStage" -> "false",
-        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
-    for ((mode, conf) <- modes) {
-      val before = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
-        val nq = df.select(col("id") +: col("j") +: native: _*)
-        if (mode == "generated")
-          assert(nq.queryExecution.executedPlan.toString.linesIterator
-            .exists(l => l.contains("*(") && l.contains("graft_variant_all_in_range")),
-            "not whole-stage codegen'd:\n" + nq.queryExecution.executedPlan)
-        val ns = nq.collect().map(r => r.getInt(0) -> r).toMap
-        val hs = df.select(col("id") +: hof: _*).collect().map(r => r.getInt(0) -> r).toMap
-        assert(ns.size == texts.size + 7 && hs.keySet == ns.keySet)
-        var falses, nulls = 0
-        for ((id, n) <- ns; k <- specs.indices) {
-          val (nv, hv) = (n.get(2 + k), hs(id).get(1 + k))
-          assert(nv == hv, s"$mode: ${specs(k)} on ${n.getString(1)} (row $id): native=$nv forall=$hv")
-          if (nv == false) falses += 1
-          if (nv == null) nulls += 1
-        }
-        assert(falses > ns.size * specs.size / 4 && nulls == specs.size,
-          s"vacuous corpus: $falses false, $nulls null")
-        for (r <- fromJson.select(col("id") +: walked: _*).collect(); k <- specs.indices) {
-          val expected = Option(hs(r.getInt(0)).get(1 + k)).getOrElse(true)
-          assert(r.get(1 + k) == expected,
-            s"$mode: walked ${specs(k)} on ${ns(r.getInt(0)).getString(1)}: ${r.get(1 + k)} vs $expected")
-        }
-      } finally before.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
+    inBothModes { mode =>
+      val nq = df.select(col("id") +: col("j") +: native: _*)
+      assertCodegen(mode, nq, "graft_variant_all_in_range")
+      val ns = nq.collect().map(r => r.getInt(0) -> r).toMap
+      val hs = df.select(col("id") +: hof: _*).collect().map(r => r.getInt(0) -> r).toMap
+      assert(ns.size == texts.size + 7 && hs.keySet == ns.keySet)
+      var falses, nulls = 0
+      for ((id, n) <- ns; k <- specs.indices) {
+        val (nv, hv) = (n.get(2 + k), hs(id).get(1 + k))
+        assert(nv == hv, s"$mode: ${specs(k)} on ${n.getString(1)} (row $id): native=$nv forall=$hv")
+        if (nv == false) falses += 1
+        if (nv == null) nulls += 1
+      }
+      assert(falses > ns.size * specs.size / 4 && nulls == specs.size,
+        s"vacuous corpus: $falses false, $nulls null")
+      for (r <- fromJson.select(col("id") +: walked: _*).collect(); k <- specs.indices) {
+        val expected = Option(hs(r.getInt(0)).get(1 + k)).getOrElse(true)
+        assert(r.get(1 + k) == expected,
+          s"$mode: walked ${specs(k)} on ${ns(r.getInt(0)).getString(1)}: ${r.get(1 + k)} vs $expected")
       }
     }
   }

@@ -184,6 +184,20 @@ class PipelineSpec extends AnyFunSuite {
     assert(!got.contains(4L) && !got.contains(5L))
   }
 
+  test("lineDupStats: NULL-doc_id documents count toward document frequency but get no row") {
+    val docs = Seq[(java.lang.Long, String)](
+      (1L, "shared\nmine"),
+      (null, "shared\nanon a"),
+      (null, "anon b\nanon a"))
+      .toDF("doc_id", "text")
+    val got = Dedup.lineDupStats(docs, col("text"), col("doc_id")).collect()
+    // two NULL-id documents must not fold into one row of 4 lines; doc 1's
+    // "shared" is duplicated by an anonymous document, so it still counts
+    assert(got.length == 1 && !got(0).isNullAt(0), got.toSeq)
+    assert((got(0).getLong(0), got(0).getLong(1), got(0).getLong(2), got(0).getLong(3)) ==
+      ((1L, 2L, 1L, 500000L)), got(0))
+  }
+
   test("topNgrams: exact n-grams, short rows contribute nothing, deterministic ties") {
     val docs = Seq(
       (1L, "a b c a b"),   // bigrams: "a b" ×2, "b c", "c a"
@@ -687,6 +701,23 @@ class PipelineSpec extends AnyFunSuite {
     val byKey = Dedup.simhashByKey(docsDf, col("text"), col("doc_id"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(byKey == hashes)
+  }
+
+  test("simhash of a NULL text is 0 on every path, the same as a text with no words") {
+    // xxhash64 never hashes a NULL word: words(NULL) is a NULL array
+    val docs = Seq[(Long, String)]((1L, null), (2L, ""), (3L, " ,; "), (4L, "some words"))
+      .toDF("doc_id", "text")
+    val inline = docs.select(col("doc_id"), Dedup.simhash(col("text")))
+      .collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    val staged = Dedup.withSimhash(docs, col("text")).select("doc_id", "simhash")
+      .collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    val byKey = Dedup.simhashByKey(docs, col("text"), col("doc_id"))
+      .collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    for (m <- Seq(inline, staged, byKey)) {
+      assert((1L to 3L).forall(m(_) == 0L), m)
+      assert(m(4L) != 0L, m)
+    }
+    assert(inline == staged && staged == byKey)
   }
 
   test("simhash near-dups: exact dup verified at hamming 0; distant text excluded") {

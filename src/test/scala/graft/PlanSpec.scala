@@ -207,6 +207,15 @@ class PlanSpec extends AnyFunSuite {
     assert("Exchange".r.findAllIn(p).size <= 2, "at most verdict agg + sort exchanges:\n" + p)
   }
 
+  /** The (null-safe, cast-wrapped) resume `isin` must still reach
+    * PartitionFilters — completed partitions are then never read. */
+  private def assertPrunes(remaining: org.apache.spark.sql.DataFrame): Unit = {
+    val p = planOf(remaining)
+    assert(p.contains("PartitionFilters: [") &&
+      !p.replaceAll("(?s).*PartitionFilters: \\[([^\\]]*)\\].*", "$1").trim.isEmpty,
+      "resume filter did not reach partition pruning:\n" + p)
+  }
+
   test("resume filter prunes completed partitions at the file listing") {
     val dir = java.nio.file.Files.createTempDirectory("graft-prune").toString
     spark.range(100)
@@ -216,14 +225,35 @@ class PlanSpec extends AnyFunSuite {
     store.append(
       spark.sql("SELECT 'p0' AS part, 25L AS total"), "spechash", 1L)
     val remaining = store.remaining(spark.read.parquet(s"$dir/data"), "spechash")
-    val p = planOf(remaining)
-    // the (null-safe, cast-wrapped) isin must still reach PartitionFilters —
-    // completed partitions are then never read
-    assert(p.contains("PartitionFilters: [") &&
-      !p.replaceAll("(?s).*PartitionFilters: \\[([^\\]]*)\\].*", "$1").trim.isEmpty,
-      "resume filter did not reach partition pruning:\n" + p)
+    assertPrunes(remaining)
     assert(remaining.select(countDistinct(col("part"))).collect()(0).getLong(0) == 3)
     assert(remaining.count() == 75)
+  }
+
+  test("a store holding rows of an older stats shape still resumes, prunes and reads") {
+    import graft.stats.{Metrics, MetricsStore}
+    val dir = java.nio.file.Files.createTempDirectory("graft-store-shape").toString
+    graft.data.SequenceGen.sequences(spark, 400L, numParts = 4)
+      .write.mode("overwrite").partitionBy("part").parquet(s"$dir/data")
+    val data = spark.read.parquet(s"$dir/data")
+    val store = MetricsStore(s"$dir/metrics")
+    // rows as stores written before the t-digest was dropped hold them:
+    // today's stats plus an `n_tok_tdigest` centroid-state struct
+    val oldShape = Metrics.partitionStats(data.where(col("part").isin("p000", "p001")))
+      .withColumn("n_tok_tdigest", struct(
+        array(col("n_tok_avg")).as("means"), array(col("total").cast("double")).as("weights")))
+    assert(oldShape.schema("n_tok_tdigest").dataType.simpleString ==
+      "struct<means:array<double>,weights:array<double>>")
+    store.append(oldShape, "spechash", 1L)
+    store.append(Metrics.partitionStats(data.where(col("part") === "p002")), "spechash", 2L)
+    assert(store.completedParts(spark, "spechash").sorted == Seq("p000", "p001", "p002"))
+    val remaining = store.remaining(data, "spechash")
+    assertPrunes(remaining)
+    assert(remaining.select("part").distinct().collect().map(_.getString(0)).toSeq == Seq("p003"))
+    assert(remaining.count() == data.where(col("part") === "p003").count())
+    val stored = store.read(spark).select("part", "total", "spec_hash", "run_epoch").collect()
+    assert(stored.map(_.getString(0)).sorted.toSeq == Seq("p000", "p001", "p002"))
+    assert(stored.map(_.getLong(1)).sum == 300L)
   }
 
   test("IVF bucketed layout: probes prune non-probed centroid partitions") {
