@@ -118,20 +118,18 @@ object Compiler {
     // hottest expression of the token suite: the element-domain forall is
     // a CodegenFallback HOF; use the native codegen'd range loop when the
     // subschema is a pure range (`rangeItems`) over an integral element
-    // type, every bound is a whole valid long (fractional bounds compare as
-    // doubles) and graft extensions are active; `integer:true` is
-    // statically satisfied on integral columns (identical semantics —
-    // ExtSpec pins parity incl. null elements)
+    // type and every bound is a whole valid long (fractional bounds compare
+    // as doubles); `integer:true` is statically satisfied on integral
+    // columns (identical semantics — ExtSpec pins parity incl. null elements)
     override protected def allItems(n: Loc, sub: Spec): Option[Column] =
       rangeItems(sub).filter { r =>
         Seq(ByteType, ShortType, IntegerType, LongType).contains(elemType(n)) &&
-          r.bounds.forall(b => b.isWhole && b.isValidLong) &&
-          graft.ext.GraftExtensions.installed("graft_all_in_range")
+          r.bounds.forall(b => b.isWhole && b.isValidLong)
       }.map { r =>
         val (lo, hi) = r.tightest(_.toLong, java.lang.Long.compare)
         val (l, ls) = lo.getOrElse((Long.MinValue, false))
         val (h, hs) = hi.getOrElse((Long.MaxValue, false))
-        call_function("graft_all_in_range", n.value, lit(l), lit(h), lit(ls), lit(hs))
+        graft.ext.Native.allInRange(n.value, l, h, ls, hs)
       }
 
     protected def string(n: Loc): Scalar = Scalar(n.value, n.value, json(n))

@@ -3,15 +3,17 @@ package graft.compile
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-import org.apache.spark.sql.types.{DoubleType, StringType}
+import org.apache.spark.sql.types.StringType
 
+import graft.ext.{GraftVariantOps, Native}
 import graft.spec._
 
 /** Dynamic-JSON compiler: spec → checks over a Spark 4 VARIANT column.
   *
   * This is the exact-parity mode: like the reference's `validate(JSON::Any)`
   * (/root/reference/src/validator.cr), type gates dispatch on the RUNTIME
-  * type of each value (`schema_of_variant`), heterogeneous arrays and
+  * type of each value (the native `graft_variant_kind`, which reads the
+  * variant's type byte inside codegen), heterogeneous arrays and
   * dynamic object keys work, and JSON null is distinct from SQL null
   * (present-null vs absent — the distinction the typed-column mode cannot
   * express). All checks remain pure Catalyst expressions; recursion over
@@ -21,9 +23,9 @@ import graft.spec._
   * supplies the Columns.
   *
   * Staging (the r1→r2 performance fix): variant derivations
-  * (`schema_of_variant`, `try_variant_get` extractions, child values) are
-  * CodegenFallback expressions, and round 1 re-derived them inside EVERY
-  * check — 28 s/100k rows for a 4-keyword spec. `compileStaged` memoizes
+  * (`try_variant_get` extractions, child values) are CodegenFallback
+  * expressions, and round 1 re-derived them and the runtime type inside
+  * EVERY check — 28 s/100k rows for a 4-keyword spec. `compileStaged` memoizes
   * each distinct derivation as ONE projection column that all checks
   * reference (CollapseProject keeps expensive multi-referenced projections
   * un-inlined), so per-row cost is one parse + one type-derivation +
@@ -62,12 +64,8 @@ object VariantCompiler {
     private def memo(suffix: String, c: => Column): Column =
       stager.fold(c)(st => st.stage(s"$key#$suffix", c))
 
-    // type gates use the native codegen'd `graft_variant_kind` when the
-    // session has GraftExtensions, else CodegenFallback `schema_of_variant`
-    // string matching (identical outcomes — see graft.ext.VariantKind)
-    private lazy val native: Boolean = graft.ext.GraftExtensions.installed("graft_variant_kind")
-    lazy val kind: Column = memo("kind", call_function("graft_variant_kind", v))
-    lazy val tpe: Column = memo("tpe", schema_of_variant(v))
+    // type gates compare the native codegen'd `graft_variant_kind`
+    lazy val kind: Column = memo("kind", Native.variantKind(v))
     lazy val asStr: Column = memo("str", try_variant_get(v, "$", "string"))
     lazy val asDbl: Column = memo("dbl", try_variant_get(v, "$", "double"))
     lazy val asBool: Column = memo("bool", try_variant_get(v, "$", "boolean"))
@@ -79,16 +77,14 @@ object VariantCompiler {
     // staging it would force a to_json of every row on every scan
     lazy val json: Column = to_json(v)
 
-    private def is(kindId: Int, fallback: => Column): Column =
-      if (native) v.isNotNull && kind === kindId else v.isNotNull && fallback
+    private def is(kindId: Int): Column = v.isNotNull && kind === kindId
 
-    def isObj: Column = is(graft.ext.GraftVariantOps.Object, tpe.startsWith("OBJECT"))
-    def isArr: Column = is(graft.ext.GraftVariantOps.Array, tpe.startsWith("ARRAY"))
-    def isStr: Column = is(graft.ext.GraftVariantOps.String, tpe === "STRING")
-    def isNum: Column = is(graft.ext.GraftVariantOps.Number,
-      tpe.rlike("^(BIGINT|INT|SMALLINT|TINYINT|DOUBLE|FLOAT|DECIMAL)"))
-    def isBool: Column = is(graft.ext.GraftVariantOps.Boolean, tpe === "BOOLEAN")
-    def isJsonNull: Column = is(graft.ext.GraftVariantOps.Null, is_variant_null(v))
+    def isObj: Column = is(GraftVariantOps.Object)
+    def isArr: Column = is(GraftVariantOps.Array)
+    def isStr: Column = is(GraftVariantOps.String)
+    def isNum: Column = is(GraftVariantOps.Number)
+    def isBool: Column = is(GraftVariantOps.Boolean)
+    def isJsonNull: Column = is(GraftVariantOps.Null)
 
     def has(prop: String): Column = map_contains_key(asMap, prop)
 
@@ -156,17 +152,14 @@ object VariantCompiler {
     // the element-domain forall over JSON is a CodegenFallback HOF that
     // re-derives each element's kind and double per check; a pure range
     // subschema (`rangeItems`) runs as the native codegen'd loop instead
-    // when graft extensions are active (identical semantics — ExtSpec pins
-    // parity over JSON numbers, non-numbers, NaN and ±Infinity)
+    // (identical semantics — ExtSpec pins parity over JSON numbers,
+    // non-numbers, NaN and ±Infinity)
     override protected def allItems(n: VNode, sub: Spec): Option[Column] =
-      rangeItems(sub).filter(_ => graft.ext.GraftExtensions.installed("graft_variant_all_in_range"))
-        .map { r =>
-          val (lo, hi) = r.tightest(_.toDouble, SQLOrderingUtil.compareDoubles)
-          def side(b: Option[(Double, Boolean)]): Column =
-            b.fold(lit(null).cast(DoubleType))(x => lit(x._1))
-          call_function("graft_variant_all_in_range", n.asArr, side(lo), side(hi),
-            lit(lo.exists(_._2)), lit(hi.exists(_._2)), lit(r.integer))
-        }
+      rangeItems(sub).map { r =>
+        val (lo, hi) = r.tightest(_.toDouble, SQLOrderingUtil.compareDoubles)
+        Native.variantAllInRange(n.asArr, lo.map(_._1), hi.map(_._1),
+          lo.exists(_._2), hi.exists(_._2), r.integer)
+      }
 
     protected def string(n: VNode): Scalar = Scalar(n.asStr, n.asStr, n.asStr)
     protected def number(n: VNode): Scalar = {

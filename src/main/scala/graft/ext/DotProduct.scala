@@ -16,7 +16,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * lambda variable per element, and allocates the zipped array. At 100 TB
   * the brute-force score IS the scan — this expression keeps it inside the
   * generated loop (this is case (b) of the custom-operator ladder: a scalar
-  * Catalyst Expression, registered session-wide by [[GraftExtensions]]).
+  * Catalyst Expression, built as a Column by `Native.dot` and registered as
+  * SQL `graft_dot` by [[GraftExtensions]]).
   *
   * Semantics match the HOF form exactly, including summation ORDER
   * (ascending index, left fold — bit-identical doubles, which the DuckDB

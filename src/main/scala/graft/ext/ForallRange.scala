@@ -17,7 +17,8 @@ import org.apache.spark.sql.types._
   * the HOTTEST expression of the whole validation suite — touching every
   * token of every sequence — runs interpreted, binding a boxed lambda
   * variable per element. This expression is the tight generated loop
-  * instead (custom-operator ladder case (b), like [[DotProduct]]).
+  * instead (custom-operator ladder case (b), like [[DotProduct]]); the typed
+  * compiler builds it through `Native.allInRange`.
   *
   * Semantics match the HOF+pred composition EXACTLY:
   *  - null array → null (forall of null),
@@ -128,7 +129,7 @@ case class ForallInRange(arr: Expression, lo: Expression, hi: Expression,
   * so that lambda runs interpreted for every element of every row and
   * re-derives the element's kind and double per check. This expression
   * reads the type byte and the number once per element, in one generated
-  * loop.
+  * loop; the variant compiler builds it through `Native.variantAllInRange`.
   *
   * Semantics match that composition EXACTLY:
   *  - null array → null; empty array → true;

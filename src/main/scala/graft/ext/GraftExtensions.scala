@@ -1,83 +1,76 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
+import org.apache.spark.sql.GraftAccess.{column, expression}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.types.DoubleType
 
-/** Session extension registering graft's native expressions — install via
-  * `.config("spark.sql.extensions", "graft.ext.GraftExtensions")` (the
-  * supported public injection point; every graft session builder sets it).
-  * After installation the expressions resolve like built-ins:
-  * `call_function("graft_dot", a, b)` or SQL `graft_dot(a, b)`. */
+/** Session extension registering the SQL names of graft's native
+  * expressions — install via
+  * `.config("spark.sql.extensions", "graft.ext.GraftExtensions")` (every
+  * graft session builder sets it). Scala callers never need it: they build
+  * the expressions through [[Native]], in any session. After installation
+  * the names resolve like built-ins: SQL `graft_dot(a, b)` or
+  * `call_function("graft_dot", a, b)`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_dot takes exactly 2 arguments")
-        DotProduct(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_variant_kind"),
-      new ExpressionInfo(classOf[VariantKind].getName, "graft_variant_kind"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "graft_variant_kind takes exactly 1 argument")
-        VariantKind(children.head)
-      }))
-    // Spark's own runtime-filter bloom expressions, surfaced as callable
-    // functions (upstream registers them internal-only): the historical-
-    // corpus membership sketch for incremental dedup (pipeline/Dedup
-    // .bloomMightContain). Aggregate child must be LongType (xxhash64).
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "graft_bloom_agg(longValue, estimatedItems, numBits)")
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          children(0), children(1), children(2)).toAggregateExpression()
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_bloom_contains"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "graft_bloom_contains(bloomBinary, longValue)")
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          children(0), children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_all_in_range"),
-      new ExpressionInfo(classOf[ForallInRange].getName, "graft_all_in_range"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5, "graft_all_in_range takes exactly 5 arguments")
-        ForallInRange(children(0), children(1), children(2), children(3), children(4))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_variant_all_in_range"),
-      new ExpressionInfo(classOf[VariantForallInRange].getName, "graft_variant_all_in_range"),
-      (children: Seq[Expression]) => {
-        require(children.size == 6, "graft_variant_all_in_range takes exactly 6 arguments")
-        VariantForallInRange(children(0), children(1), children(2), children(3), children(4),
-          children(5))
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    for ((name, cls, arity, build) <- Native.sqlFunctions)
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+        (children: Seq[Expression]) => {
+          require(children.size == arity, s"$name takes exactly $arity arguments")
+          build(children)
+        }))
 }
 
-object GraftExtensions {
+/** One Column constructor per native expression, built straight from its
+  * Catalyst `Expression`: the plan does not depend on the session's
+  * function registry. Bounds and flags are Scala values, so they reach the
+  * expressions as the foldable literals their type checks require. */
+object Native {
 
-  /** True when the active session resolves `fn`, i.e. has GraftExtensions
-    * installed: callers then emit the native expression instead of its
-    * composable fallback. */
-  def installed(fn: String): Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession.exists { s =>
-      try s.catalog.functionExists(fn)
-      catch { case _: Throwable => false }
-    }
+  /** SQL name, expression class, arity and builder of each expression that
+    * [[GraftExtensions]] registers. */
+  private[ext] val sqlFunctions: Seq[(String, Class[_], Int, Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", classOf[DotProduct], 2, c => DotProduct(c(0), c(1))),
+    ("graft_variant_kind", classOf[VariantKind], 1, c => VariantKind(c(0))),
+    ("graft_all_in_range", classOf[ForallInRange], 5,
+      c => ForallInRange(c(0), c(1), c(2), c(3), c(4))),
+    ("graft_variant_all_in_range", classOf[VariantForallInRange], 6,
+      c => VariantForallInRange(c(0), c(1), c(2), c(3), c(4), c(5))))
+
+  /** [[DotProduct]] of two `array<double>` columns. */
+  def dot(a: Column, b: Column): Column = column(DotProduct(expression(a), expression(b)))
+
+  /** [[VariantKind]] of a variant column. */
+  def variantKind(v: Column): Column = column(VariantKind(expression(v)))
+
+  /** [[ForallInRange]]: every element of an integral array within
+    * [lo, hi], each side strict or not. */
+  def allInRange(arr: Column, lo: Long, hi: Long, loStrict: Boolean, hiStrict: Boolean): Column =
+    column(ForallInRange(expression(arr), Literal(lo), Literal(hi), Literal(loStrict),
+      Literal(hiStrict)))
+
+  /** [[VariantForallInRange]]: every element of an `array<variant>` a
+    * number within the bounds (an absent side is `None`), and whole when
+    * `integer`. */
+  def variantAllInRange(arr: Column, lo: Option[Double], hi: Option[Double], loStrict: Boolean,
+                        hiStrict: Boolean, integer: Boolean): Column = {
+    def bound(b: Option[Double]) = Literal.create(b.map(Double.box).orNull, DoubleType)
+    column(VariantForallInRange(expression(arr), bound(lo), bound(hi), Literal(loStrict),
+      Literal(hiStrict), Literal(integer)))
+  }
+
+  /** Spark's runtime-filter bloom aggregate over a LongType column: the
+    * serialized filter as binary (null over no rows). */
+  def bloomAgg(value: Column, estimatedItems: Long, numBits: Long): Column =
+    column(new BloomFilterAggregate(expression(value), Literal(estimatedItems), Literal(numBits))
+      .toAggregateExpression())
+
+  /** Spark's runtime-filter bloom probe of a LongType column against a
+    * serialized filter. */
+  def bloomMightContain(bloom: Array[Byte], value: Column): Column =
+    column(BloomFilterMightContain(Literal(bloom), expression(value)))
 }

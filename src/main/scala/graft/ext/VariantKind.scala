@@ -50,12 +50,12 @@ object GraftVariantOps {
   * The composable gate (`schema_of_variant(v).startsWith("OBJECT")` etc.)
   * derives and allocates the full TYPE STRING per row per value node and is
   * CodegenFallback; the dynamic-JSON validator dispatches on the runtime
-  * type of EVERY node, so this sits on that mode's hot path.
-  * VariantCompiler uses it when the session has GraftExtensions installed
-  * and falls back to schema_of_variant otherwise — identical gate outcomes
-  * (numeric family = LONG/DOUBLE/DECIMAL/FLOAT ≙ the schema-string prefix
-  * set; DATE/TIMESTAMP/BINARY/UUID cannot arise from parse_json and gate
-  * false in both forms). */
+  * type of EVERY node, so this sits on that mode's hot path. VariantCompiler
+  * builds it through `Native.variantKind` for every type gate. Its kinds
+  * give the same gate outcomes as the schema-string prefixes (numeric
+  * family = LONG/DOUBLE/DECIMAL/FLOAT; DATE/TIMESTAMP/BINARY/UUID cannot
+  * arise from parse_json and gate false in both forms); ExtSpec pins that
+  * rule on every JSON shape. */
 case class VariantKind(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = IntegerType

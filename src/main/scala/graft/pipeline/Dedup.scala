@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ext.Native
 import Hashing.HashFamily
 
 /** Deduplication operators for training-data pipelines, in increasing
@@ -112,8 +113,8 @@ object Dedup {
     * blooms or fall back to the distinct-key anti-join
     * (`CrossRow.referentialLargeDim`'s strategy). Uses Spark's own
     * runtime-filter expressions (BloomFilterAggregate /
-    * BloomFilterMightContain, surfaced via GraftExtensions) — the same
-    * codegen'd machinery AQE injects for join pruning. */
+    * BloomFilterMightContain, built as Columns by `graft.ext.Native`) — the
+    * same codegen'd machinery AQE injects for join pruning. */
   def bloomMightContain(history: DataFrame, histKey: Column,
                         batch: DataFrame, batchKey: Column,
                         expectedItems: Long, fpp: Double = 0.01): DataFrame = {
@@ -138,8 +139,8 @@ object Dedup {
     // duplicates — null history keys never enter the sketch, null batch
     // keys never probe
     val bloom = history.where(histKey.isNotNull)
-      .select(call_function("graft_bloom_agg",
-        xxhash64(histKey), lit(math.min(expectedItems, maxItems)), lit(numBits)).as("bf"))
+      .select(Native.bloomAgg(xxhash64(histKey), math.min(expectedItems, maxItems), numBits)
+        .as("bf"))
       .head.getAs[Array[Byte]](0)
     // empty history → the aggregate evals to null → nothing is a duplicate
     if (bloom == null) batch.withColumn("might_dup", lit(false))
@@ -148,7 +149,7 @@ object Dedup {
     // then a codegen'd per-row probe — the trained-centroid pattern
     else batch.withColumn("might_dup",
       when(batchKey.isNull, lit(false))
-        .otherwise(call_function("graft_bloom_contains", lit(bloom), xxhash64(batchKey))))
+        .otherwise(Native.bloomMightContain(bloom, xxhash64(batchKey))))
   }
 
   // -- MinHash + LSH -------------------------------------------------------
@@ -186,11 +187,6 @@ object Dedup {
                                    hash: HashFamily = Hashing.Xx): Column =
     array((0 until numHashes).map(i =>
       array_min(transform(sh, s => Hashing.Mix.lane(Hashing.Mix.base(hash, s), i)))): _*)
-
-  /** Small-input convenience (inlines shingles; at scale use
-    * `minhashSignatures` over a staged shingle frame). */
-  def minhashSignature(text: Column, numHashes: Int = 32, k: Int = 3): Column =
-    minhashSignatureFromShingles(TextAnalysis.shingles(text, k), numHashes)
 
   /** LSH band buckets from a signature frame: each band of `rowsPerBand`
     * signature values hashes to one bucket id. Returns (doc_id, band,
@@ -292,11 +288,6 @@ object Dedup {
     j.where(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
   }
-
-  def jaccardVerify(df: DataFrame, text: Column, docId: Column,
-                    candidates: DataFrame, k: Int = 3,
-                    threshold: Double = 0.7): DataFrame =
-    jaccardVerifyFromShingles(shingleFrame(df, text, docId, k), candidates, threshold)
 
   /** Full MinHash near-dup pipeline: ONE shingle frame feeds both LSH
     * candidate generation and the exact Jaccard filter. */
@@ -575,12 +566,14 @@ object Dedup {
     * vector — identical output to `withSimhash` for the same hash, but
     * whole-stage-codegen'd instead of `bits` interpreted lambda passes.
     * Returns (doc_id, simhash). With `Hashing.Md5` pass bits ≤ 60 (the
-    * oracle hash is a 60-bit value). */
+    * oracle hash is a 60-bit value). A document with a NULL doc_id gets no
+    * row: grouping by key would fold all of them into one simhash. */
   def simhashByKey(df: DataFrame, text: Column, docId: Column,
                    bits: Int = 64, hash: HashFamily = Hashing.Xx): DataFrame = {
     // word hash STAGED once — inlining it would re-evaluate the strong hash
     // per bit (×bits); multi-referenced, so CollapseProject keeps the stage
-    val words = df.select(docId.as("doc_id"), explode_outer(TextAnalysis.words(text)).as("_w"))
+    val words = df.where(docId.isNotNull)
+      .select(docId.as("doc_id"), explode_outer(TextAnalysis.words(text)).as("_w"))
       .withColumn("_h", hash.plain(col("_w")))
     val h = col("_h")
     val sums = (0 until bits).map { i =>
@@ -608,14 +601,22 @@ object Dedup {
       .select(col("doc_id"), col("simhash"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
   }
 
+  /** Sized band buckets of the documents with a text. A NULL text hashes to
+    * 0 like an empty one, so without the filter every NULL-text document
+    * would pair with every other (and with an empty text) at Hamming 0. */
+  private def sizedSimhashBuckets(df: DataFrame, text: Column, docId: Column, bands: Int,
+                                  bits: Int, hash: HashFamily): DataFrame =
+    sizedBuckets(simhashBuckets(
+      simhashByKey(df.where(text.isNotNull), text, docId, bits, hash), bands, bits))
+
   /** SimHash near-dup candidates: band the `bits` bits into `bands` chunks;
     * docs sharing any chunk value are candidates (≤ hammingMax differing
-    * bits guarantees a shared band when bands > hammingMax). */
+    * bits guarantees a shared band when bands > hammingMax). A NULL-text
+    * document is never a candidate. */
   def simhashCandidates(df: DataFrame, text: Column, docId: Column,
                         bands: Int = 4, maxBucket: Int = 64,
                         bits: Int = 64, hash: HashFamily = Hashing.Xx): DataFrame =
-    pairsFromSized(sizedBuckets(
-      simhashBuckets(simhashByKey(df, text, docId, bits, hash), bands, bits)), maxBucket)
+    pairsFromSized(sizedSimhashBuckets(df, text, docId, bands, bits, hash), maxBucket)
 
   /** Full SimHash near-dup pipeline: banded candidates verified by EXACT
     * Hamming distance (xor + bit_count — codegen'd). Returns
@@ -628,14 +629,12 @@ object Dedup {
     * embedding pipeline carries its vector), so Hamming verification reads
     * it straight out of the pair — the r2 shape joined the hash frame back
     * onto the candidates twice, executing the simhash aggregation pipeline
-    * three times per run. */
+    * three times per run. A NULL-text document is never a candidate. */
   def simhashNearDuplicates(df: DataFrame, text: Column, docId: Column,
                             maxHamming: Int = 3, bands: Int = 4,
                             maxBucket: Int = 64, bits: Int = 64,
                             hash: HashFamily = Hashing.Xx): DataFrame = {
-    val sized = sizedBuckets(
-      simhashBuckets(simhashByKey(df, text, docId, bits, hash), bands, bits))
-    val grouped = sized
+    val grouped = sizedSimhashBuckets(df, text, docId, bands, bits, hash)
       .where(col("bucket_size") > 1 && col("bucket_size") <= maxBucket)
       .groupBy(col("band"), col("bucket"))
       .agg(collect_list(struct(col("doc_id").as("vid"), col("simhash").as("sh"))).as("docs"))
@@ -655,19 +654,13 @@ object Dedup {
 
   // -- embedding near-dup --------------------------------------------------
 
-  /** Dot product: the native codegen'd `graft_dot` expression when the
-    * active session has GraftExtensions installed (every graft entry point
-    * does — the HOF `aggregate(zip_with(...))` form is CodegenFallback and
-    * leaves whole-stage codegen on the ANN hot loop), else the composable
-    * fold. Both compute in ascending-index left-fold order over doubles —
-    * bit-identical results, which the DuckDB oracles rely on. */
-  private[graft] def dot(x: Column, y: Column): Column = {
-    if (graft.ext.GraftExtensions.installed("graft_dot"))
-      call_function("graft_dot", x.cast("array<double>"), y.cast("array<double>"))
-    else
-      aggregate(zip_with(x.cast("array<double>"), y.cast("array<double>"),
-        (p, q) => p * q), lit(0.0d), (acc, v) => acc + v)
-  }
+  /** Dot product: the native codegen'd `graft_dot` expression (the HOF
+    * `aggregate(zip_with(...))` form is CodegenFallback and would leave
+    * whole-stage codegen on the ANN hot loop). It sums in ascending-index
+    * left-fold order over doubles, bit-identical to that fold, which the
+    * DuckDB oracles rely on. */
+  private[graft] def dot(x: Column, y: Column): Column =
+    Native.dot(x.cast("array<double>"), y.cast("array<double>"))
 
   /** Cosine similarity of two numeric-array columns. */
   def cosine(a: Column, b: Column): Column =

@@ -1,6 +1,6 @@
 package graft.run
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.compile.Compiler
@@ -136,9 +136,4 @@ object Suite {
     v.verdicts.agg(sum(col("violations"))).collect()
     v.violations.write.format("noop").mode("overwrite").save()
   }
-
-  /** Convenience: generated sequences at a given row count (bench + tests). */
-  def onGenerated(spark: SparkSession, rows: Long, numParts: Int = 16): Validation =
-    validateSequences(SequenceGen.sequences(spark, rows, numParts),
-                      SequenceGen.dimSources(spark))
 }

@@ -84,7 +84,7 @@ object Validator {
     }
 
     Validation(
-      verdicts = verdictFrame(df, checks, partCol),
+      verdicts = verdictFrame(df, checks, partCol.as("part")),
       violations = violationFrame(df, checks, col(docId), partCol)
     )
   }
@@ -102,21 +102,28 @@ object Validator {
     StructField("path", StringType, nullable = false),
     StructField("observed", StringType), StructField("message", StringType, nullable = false)))
 
-  /** (part, rank, constraint_id, total, violations, pass) — single scan,
-    * map-side partial agg, one tiny shuffle keyed by partition. */
-  def verdictFrame(df: DataFrame, checks: Vector[CompiledCheck], partCol: Column): DataFrame = {
+  /** (keys…, rank, constraint_id, total, violations, pass) per group of the
+    * named `keys` (batch: `part`; streaming: `window`, `part`) — single scan,
+    * map-side partial agg, one tiny shuffle keyed by the group.
+    *
+    * Batch verdicts stay a conditional count over the rows rather than
+    * `CrossRow.verdictsFromViolations` (the suite's derivation): counting
+    * from the violations would need a second input scan for the per-part
+    * totals, and PlanSpec pins the row checks to one scan. */
+  def verdictFrame(df: DataFrame, checks: Vector[CompiledCheck], keys: Column*): DataFrame = {
     val aggs = checks.map(c => sum((!c.pass).cast(LongType)).as(s"c${c.rank}"))
-    val agg = df.groupBy(partCol.as("part"))
+    val agg = df.groupBy(keys: _*)
       .agg(count(lit(1)).as("total"), aggs: _*)
-    // unpivot AFTER aggregation: explode runs over |parts| rows, not the data
+    val keyCols = agg.columns.take(keys.size).toSeq.map(col) // the keys lead the output
+    // unpivot AFTER aggregation: explode runs over |groups| rows, not the data
     val kv = explode(array(checks.map(c =>
       struct(lit(c.rank).as("rank"), lit(c.id).as("constraint_id"),
              col(s"c${c.rank}").as("violations"))): _*))
-    agg.select(col("part"), col("total"), kv.as("kv"))
-      .select(
-        col("part"), col("kv.rank").as("rank"), col("kv.constraint_id").as("constraint_id"),
+    agg.select(keyCols ++ Seq(col("total"), kv.as("kv")): _*)
+      .select(keyCols ++ Seq(
+        col("kv.rank").as("rank"), col("kv.constraint_id").as("constraint_id"),
         col("total"), col("kv.violations").as("violations"),
-        (col("kv.violations") === 0).as("pass"))
+        (col("kv.violations") === 0).as("pass")): _*)
   }
 
   /** (part, doc_id, rank, constraint_id, path, observed, message). */

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.compile.{CompiledCheck, Compiler}
+import graft.compile.Compiler
 import graft.spec.Spec
 
 /** Structured Streaming front-end for the same compiled checks.
@@ -31,26 +31,9 @@ object StreamValidator {
   def verdictStream(stream: DataFrame, spec: Spec, timeCol: String,
                     windowDuration: String, watermarkDelay: String,
                     part: Option[String]): DataFrame = {
-    val checks = Compiler.compile(spec, stream.schema)
-    verdictStreamForChecks(stream, checks, timeCol, windowDuration, watermarkDelay, part)
-  }
-
-  def verdictStreamForChecks(stream: DataFrame, checks: Vector[CompiledCheck],
-                             timeCol: String, windowDuration: String,
-                             watermarkDelay: String, part: Option[String]): DataFrame = {
-    val partCol = part.map(col).getOrElse(lit("all"))
-    val aggs = checks.map(c => sum((!c.pass).cast("long")).as(s"c${c.rank}"))
-    val agg = stream
-      .withWatermark(timeCol, watermarkDelay)
-      .groupBy(window(col(timeCol), windowDuration), partCol.as("part"))
-      .agg(count(lit(1)).as("total"), aggs: _*)
-    val kv = explode(array(checks.map(c =>
-      struct(lit(c.rank).as("rank"), lit(c.id).as("constraint_id"),
-             col(s"c${c.rank}").as("violations"))): _*))
-    agg.select(col("window"), col("part"), col("total"), kv.as("kv"))
-      .select(col("window"), col("part"),
-        col("kv.rank").as("rank"), col("kv.constraint_id").as("constraint_id"),
-        col("total"), col("kv.violations").as("violations"),
-        (col("kv.violations") === 0).as("pass"))
+    graft.run.Validator.verdictFrame(stream.withWatermark(timeCol, watermarkDelay),
+      Compiler.compile(spec, stream.schema),
+      window(col(timeCol), windowDuration).as("window"),
+      part.map(col).getOrElse(lit("all")).as("part"))
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import scala.util.Random
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.run.Validator
 import graft.spec.SpecParser
 
-import Harness.spark
+import Harness.{inBothModes, spark}
 
 /** Differential fuzz between the engine's two independent column backends
   * under one keyword walk.
@@ -31,8 +31,13 @@ import Harness.spark
   * same in both and is invisible here; the golden `*ValidatorSpec`s and
   * the driver oracles pin those.
   *
-  * Compared: ordered (doc_id, path, constraint_id). Messages and `observed`
-  * are NOT compared: items/contains subschema messages collapse differently
+  * Compared: ordered (doc_id, path, constraint_id), and per constraint id
+  * each backend's verdict count against those violations. Every trial runs
+  * in both evaluation modes (`Harness.inBothModes`): the violation frame
+  * evaluates its checks through `eval` (its `filter` is CodegenFallback),
+  * while the verdict aggregate runs them as generated code in "generated"
+  * mode, so the verdict comparison is what puts the native expressions'
+  * generated code under the fuzz. Messages and `observed` are NOT compared: items/contains subschema messages collapse differently
   * by design (the variant mode counts its runtime type gate as a second
   * check — KeywordWalk scaladoc "Differences"), and observed formatting
   * follows the column type (int "5" vs variant double "5.0").
@@ -266,33 +271,60 @@ class DifferentialFuzzSpec extends AnyFunSuite {
       .sortBy(t => (t._1, t._2))
       .map(t => (t._1, t._3, t._4)).toVector
 
-  /** Returns the (agreed) violation count so callers can assert the corpus
-    * actually exercises failures — all-green agreement would be vacuous. */
+  /** Violation count per constraint id, from the verdict frame. */
+  private def verdictCounts(v: graft.run.Validation, id: String => String): Map[String, Long] =
+    v.verdicts.where(col("violations") > 0).select("constraint_id", "violations").collect()
+      .toSeq.groupMapReduce(r => id(r.getString(0)))(_.getLong(1))(_ + _)
+
+  /** In each evaluation mode, the typed and variant runs (rebuilt per mode,
+    * so each plans under that mode's conf) must produce the same ordered
+    * violations, and each backend's verdict counts must match them.
+    * `typedId` maps a typed constraint id onto the variant one; `rowsOf`
+    * renders the input rows of the diverging docs. Returns the (agreed)
+    * violation count so callers can assert the corpus actually exercises
+    * failures — all-green agreement would be vacuous. */
+  private def agree(label: String, schemaJson: String, typedRun: => graft.run.Validation,
+                    variantRun: => graft.run.Validation, typedId: String => String,
+                    rowsOf: Set[String] => String): Int = {
+    var agreed = 0
+    inBothModes { mode =>
+      val (tv, vv) = (typedRun, variantRun)
+      val typed = orderedVios(tv).map { case (d, p, id) => (d, p, typedId(id)) }
+      val variant = orderedVios(vv)
+      if (typed != variant) {
+        val onlyTyped = typed.diff(variant).take(8)
+        val onlyVariant = variant.diff(typed).take(8)
+        fail(
+          s"""$label ($mode): typed and variant violations diverge
+             |schema: $schemaJson
+             |typed only   : $onlyTyped
+             |variant only : $onlyVariant
+             |${rowsOf((onlyTyped ++ onlyVariant).map(_._1).take(3).toSet)}""".stripMargin)
+      }
+      val counts = typed.groupMapReduce(_._3)(_ => 1L)(_ + _)
+      for ((backend, v, id) <- Seq(("typed", tv, typedId), ("variant", vv, identity[String] _))) {
+        val fromVerdicts = verdictCounts(v, id)
+        assert(fromVerdicts == counts,
+          s"""$label ($mode): $backend verdict counts diverge from the violations
+             |schema: $schemaJson
+             |verdicts  : $fromVerdicts
+             |violations: $counts""".stripMargin)
+      }
+      agreed = typed.size
+    }
+    agreed
+  }
+
   private def runTrial(trial: Int, schemaJson: String, rows: Seq[Row]): Int = {
     import scala.jdk.CollectionConverters._
     val spec = SpecParser.parse(schemaJson)
     val df = spark.createDataFrame(rows.asJava, rowSchema)
-
-    val typed = orderedVios(Validator.validate(df, spec, "doc_id", None))
-
-    val js = df.select(col("doc_id"),
+    def js = df.select(col("doc_id"),
       to_json(struct(rowSchema.fieldNames.map(col).toIndexedSeq: _*),
         Map("ignoreNullFields" -> "true").asJava).as("js"))
-    val variant = orderedVios(Validator.validateJson(js, spec, "js", "doc_id", None))
-
-    if (typed != variant) {
-      val onlyTyped = typed.diff(variant).take(8)
-      val onlyVariant = variant.diff(typed).take(8)
-      val badDocs = (onlyTyped ++ onlyVariant).map(_._1).distinct.take(3).toSet
-      val badRows = rows.filter(r => badDocs.contains(r.getString(0)))
-      fail(
-        s"""trial $trial: typed and variant violations diverge
-           |schema: $schemaJson
-           |typed only   : $onlyTyped
-           |variant only : $onlyVariant
-           |rows: ${badRows.mkString("; ")}""".stripMargin)
-    }
-    typed.size
+    agree(s"trial $trial", schemaJson, Validator.validate(df, spec, "doc_id", None),
+      Validator.validateJson(js, spec, "js", "doc_id", None), identity,
+      docs => "rows: " + rows.filter(r => docs.contains(r.getString(0))).mkString("; "))
   }
 
   test("typed and variant compilers agree on seeded random schemas x rows") {
@@ -337,7 +369,7 @@ class DifferentialFuzzSpec extends AnyFunSuite {
     * variant mode parses the same JSON text. Constraint ids differ only by
     * the documented prefix (".v/…" vs "./…"), normalized before compare. */
   private def runRootTrial(trial: Int, schemaJson: String, dt: DataType,
-                           values: Seq[(Any, String)]): Int = {
+                           values: Seq[(Any, String)], castVariant: Boolean = false): Int = {
     import scala.jdk.CollectionConverters._
     val spec = SpecParser.parse(schemaJson)
     val schema = StructType(Seq(
@@ -346,21 +378,22 @@ class DifferentialFuzzSpec extends AnyFunSuite {
       StructField("js", StringType, nullable = false)))
     val rows = values.zipWithIndex.map { case ((tv, js), i) => Row(f"d$i%04d", tv, js) }
     val df = spark.createDataFrame(rows.asJava, schema)
+    agree(s"root trial $trial", schemaJson, Validator.validateColumn(df, spec, "v", "doc_id", None),
+      if (castVariant) validateVariant(df, spec, col("v").cast(VariantType))
+      else Validator.validateJson(df, spec, "js", "doc_id", None),
+      _.replaceFirst("^\\.v(?=[/.~])", "."),
+      docs => "values: " + rows.filter(r => docs.contains(r.getString(0))).mkString("; "))
+  }
 
-    val typed = orderedVios(Validator.validateColumn(df, spec, "v", "doc_id", None))
-      .map { case (d, p, id) => (d, p, id.replaceFirst("^\\.v(?=[/.~])", ".")) }
-    val variant = orderedVios(Validator.validateJson(df, spec, "js", "doc_id", None))
-
-    if (typed != variant) {
-      val onlyTyped = typed.diff(variant).take(8)
-      val onlyVariant = variant.diff(typed).take(8)
-      fail(
-        s"""root trial $trial: typed and variant violations diverge
-           |schema: $schemaJson
-           |typed only   : $onlyTyped
-           |variant only : $onlyVariant""".stripMargin)
+  /** `Validator.validateJson`'s staged compile over a variant built by `v`
+    * instead of parsed JSON text: a cast from a typed column yields DOUBLE
+    * variants JSON text cannot express (NaN, ±Infinity). */
+  private def validateVariant(df: DataFrame, spec: graft.spec.Spec, v: Column): graft.run.Validation = {
+    val (staged, checks) = graft.compile.VariantCompiler.compileStaged(spec, col("_variant"))
+    val withStaged = staged.foldLeft(df.withColumn("_variant", v)) {
+      case (acc, (name, expr)) => acc.withColumn(name, expr)
     }
-    typed.size
+    Validator.run(withStaged, checks, "doc_id", None)
   }
 
   private def renderJson(v: Any): String = v match {
@@ -446,6 +479,38 @@ class DifferentialFuzzSpec extends AnyFunSuite {
       vios += runTrial(3000 + i, schema, rows)
     }
     assert(vios > 0, "boundary corpus produced zero violations — vacuous agreement")
+  }
+
+  test("items over fractional and non-JSON numbers: directed corpus (native variant loop)") {
+    // The random corpus has integral tokens only. Fractional JSON numbers
+    // parse as DECIMAL variants; a cast from a double column gives DOUBLE
+    // variants, including NaN, ±Infinity and -0.0, which JSON text cannot
+    // express. The typed side compares doubles through `forall`, so each
+    // element kind, the integrality test and Spark's double ordering (NaN
+    // above every value, -0.0 = 0.0) of the variant range loop diverge
+    // here if they regress.
+    val itemSchemas = Seq(
+      """{"type":"number","minimum":0}""",
+      """{"type":"number","exclusiveMinimum":0,"maximum":4}""",
+      """{"type":"number","maximum":4}""",
+      """{"type":"number","minimum":-0.5,"exclusiveMaximum":2.5}""",
+      """{"type":"integer","minimum":-2,"exclusiveMaximum":6}""",
+      """{"type":"integer"}""")
+    val dt = ArrayType(DoubleType, containsNull = true)
+    val finite = Vector(-2.0, -0.5, -0.0, 0.0, 0.5, 1.0, 2.5, 3.0, 4.0, 5.5, 6.0)
+    val rnd = new Random(0xF2AC7L)
+    def arrays(pool: Vector[Any]): Seq[Seq[Any]] =
+      pool.map(Seq(_)) ++ Seq.fill(40)(Seq.fill(rnd.nextInt(5))(pool(rnd.nextInt(pool.size))))
+    val jsonValues = (arrays(finite :+ null) :+ null).map(a => (a, renderJson(a)))
+    val castValues = (arrays(finite ++ Vector(Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, null)) :+ null).map(a => (a, ""))
+    var vios = 0L
+    itemSchemas.zipWithIndex.foreach { case (s, i) =>
+      val schema = s"""{"type":"array","items":$s}"""
+      vios += runRootTrial(4000 + i, schema, dt, jsonValues)
+      vios += runRootTrial(4100 + i, schema, dt, castValues, castVariant = true)
+    }
+    assert(vios > 0, "fractional corpus produced zero violations — vacuous agreement")
   }
 
   test("collapsed keywords agree at doc level (patternProperties / additionalProperties:schema)") {

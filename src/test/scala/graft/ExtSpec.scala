@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import Harness.spark
+import Harness.{inBothModes, spark}
 
 /** Native graft_dot expression: registration via SparkSessionExtensions,
   * bit-parity with the HOF fold, null semantics, SQL surface, and
@@ -41,49 +41,44 @@ class ExtSpec extends AnyFunSuite {
 
   test("graft_variant_kind agrees with schema_of_variant gates on every JSON shape") {
     assert(spark.catalog.functionExists("graft_variant_kind"))
+    // the schema-string rule type gates used before the native kind: the
+    // prefix of schema_of_variant, and is_variant_null for JSON null
+    def prefixKind(tpe: String, jsonNull: Boolean): Int =
+      if (tpe.startsWith("OBJECT")) 0
+      else if (tpe.startsWith("ARRAY")) 1
+      else if (tpe == "STRING") 2
+      else if ("^(BIGINT|INT|SMALLINT|TINYINT|DOUBLE|FLOAT|DECIMAL)".r.findFirstIn(tpe).isDefined) 3
+      else if (tpe == "BOOLEAN") 4
+      else if (jsonNull) 5
+      else 6
+    def json(j: String) = s"parse_json('${j.replace("'", "''")}')"
     val shapes = Seq(
-      """{"a":1}""" -> 0, """[1,2]""" -> 1, """"s"""" -> 2,
-      """5""" -> 3, """5.5""" -> 3, """1e60""" -> 3, """0.1""" -> 3,
-      """true""" -> 4, """null""" -> 5)
-    shapes.foreach { case (json, expected) =>
+      json("""{"a":1}""") -> 0, json("{}") -> 0, json("""{"a":{"b":[1]}}""") -> 0,
+      json("[1,2]") -> 1, json("[]") -> 1, json("""[null,"x",{}]""") -> 1,
+      json("\"s\"") -> 2, json("\"\"") -> 2,
+      json("5") -> 3, json("-5") -> 3, json("5.5") -> 3, json("1e60") -> 3, json("0.1") -> 3,
+      json("1E2") -> 3, json("300") -> 3, json("70000") -> 3, json("9223372036854775807") -> 3,
+      json("12345678901234567890123456789012345678") -> 3, json("1e400") -> 3,
+      json("true") -> 4, json("false") -> 4, json("null") -> 5,
+      // kinds parse_json never yields: FLOAT is a number, the rest are other
+      "cast(cast(2.5 as float) as variant)" -> 3, "cast(date'2024-01-15' as variant)" -> 6,
+      "cast(timestamp'2024-01-15 10:00:00' as variant)" -> 6, "cast(X'0102' as variant)" -> 6)
+    shapes.foreach { case (v, expected) =>
       val r = spark.sql(
-        s"SELECT graft_variant_kind(parse_json('${json.replace("'", "''")}'))")
-        .collect()(0).getInt(0)
-      assert(r == expected, s"$json → $r, expected $expected")
+        s"SELECT graft_variant_kind($v), schema_of_variant($v), is_variant_null($v)").collect()(0)
+      val prefix = prefixKind(r.getString(1), r.getBoolean(2))
+      assert(r.getInt(0) == expected && prefix == expected,
+        s"$v (${r.getString(1)}): kind ${r.getInt(0)}, schema prefix $prefix, expected $expected")
     }
     // SQL-null variant → null kind
     assert(spark.sql("SELECT graft_variant_kind(cast(null as variant))")
       .collect()(0).isNullAt(0))
   }
 
-  /** Runs `body(mode)` once per evaluation path of the native expressions,
-    * then restores the session conf:
-    *  - "generated": whole-stage codegen with no silent fallback to eval,
-    *    and ConvertToLocalRelation excluded so a local input is not folded
-    *    away at plan time through `eval`;
-    *  - "interpreted": the expressions' `eval`.
-    * A CodegenFallback expression (`forall`) keeps its whole projection out
-    * of whole-stage codegen, so a native-vs-forall comparison runs each side
-    * as its own query, matched by row id. */
-  private def inBothModes(body: String => Unit): Unit = {
-    val modes = Seq(
-      "generated" -> Map("spark.sql.optimizer.excludedRules" ->
-        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation",
-        "spark.sql.codegen.fallback" -> "false", "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
-      "interpreted" -> Map("spark.sql.codegen.wholeStage" -> "false",
-        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
-    for ((mode, conf) <- modes) {
-      val before = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body(mode)
-      finally before.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
-  }
-
-  /** In "generated" mode, `fn` must sit in a whole-stage codegen span. */
+  /** In "generated" mode, `fn` must sit in a whole-stage codegen span. A
+    * CodegenFallback expression (`forall`) keeps its whole projection out of
+    * whole-stage codegen, so a native-vs-forall comparison runs each side as
+    * its own query, matched by row id. */
   private def assertCodegen(mode: String, df: org.apache.spark.sql.DataFrame, fn: String): Unit =
     if (mode == "generated")
       assert(df.queryExecution.executedPlan.toString.linesIterator
@@ -265,13 +260,10 @@ class ExtSpec extends AnyFunSuite {
     }
   }
 
-  test("the variant walk's pure-range items compiles to graft_variant_all_in_range") {
-    import graft.data.SequenceGen
-    import graft.run.Validator
-    import graft.spec.SpecParser
-    // json_runtime-shaped rows: some with a fractional token, some with
-    // n_tok as a string, plus the generator's out-of-domain tokens
-    val seqs = SequenceGen.sequences(spark, 3000, numParts = 4)
+  /** json_runtime-shaped rows (doc_id, json, part) over generated
+    * sequences: some with a fractional token, some with n_tok as a string,
+    * plus the generator's out-of-domain tokens. */
+  private def jsonSequences(seqs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val d = pmod(xxhash64(col("doc_id"), lit(5)), lit(100))
     val text = concat(lit("{\"doc_id\":\""), col("doc_id"), lit("\",\"tokens\":["),
       array_join(col("tokens"), ","), when(d < 4, lit(",0.5")).otherwise(lit("")),
@@ -281,7 +273,17 @@ class ExtSpec extends AnyFunSuite {
       when(col("source").isNull, lit(""))
         .otherwise(concat(lit(",\"source\":\""), col("source"), lit("\""))),
       lit("}"))
-    val df = seqs.select(col("doc_id"), text.as("json"), col("part"))
+    seqs.select(col("doc_id"), text.as("json"), col("part"))
+  }
+
+  private def sortedRows(f: org.apache.spark.sql.DataFrame): Seq[String] =
+    f.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+
+  test("the variant walk's pure-range items compiles to graft_variant_all_in_range") {
+    import graft.data.SequenceGen
+    import graft.run.Validator
+    import graft.spec.SpecParser
+    val df = jsonSequences(SequenceGen.sequences(spark, 3000, numParts = 4))
     val fast = Validator.validateJson(df, SpecParser.parse(SequenceGen.SeqSpecJson), "json")
     for (frame <- Seq(fast.verdicts, fast.violations)) {
       val p = frame.queryExecution.executedPlan.toString
@@ -297,12 +299,48 @@ class ExtSpec extends AnyFunSuite {
     assert(composableJson != SequenceGen.SeqSpecJson)
     val composable = Validator.validateJson(df, SpecParser.parse(composableJson), "json")
     assert(composable.violations.queryExecution.executedPlan.toString.contains("forall("))
-    def sorted(f: org.apache.spark.sql.DataFrame) = f.collect().map(_.toSeq.mkString("|")).sorted.toSeq
-    assert(sorted(fast.verdicts) == sorted(composable.verdicts))
-    assert(sorted(fast.violations) == sorted(composable.violations))
+    assert(sortedRows(fast.verdicts) == sortedRows(composable.verdicts))
+    assert(sortedRows(fast.violations) == sortedRows(composable.violations))
     val items = fast.verdicts.where(col("constraint_id") === ".tokens/items")
       .agg(sum("violations")).collect()(0).getLong(0)
     assert(items > 100, s"only $items .tokens/items violations — vacuous comparison")
+  }
+
+  test("a spec compiled with no active session still gets the native expressions") {
+    import org.apache.spark.sql.SparkSession
+    import graft.data.SequenceGen
+    import graft.run.{Validation, Validator}
+    import graft.spec.SpecParser
+    val seqs = SequenceGen.sequences(spark, 3000, numParts = 4)
+    val json = jsonSequences(seqs)
+    val spec = SpecParser.parse(SequenceGen.SeqSpecJson)
+    // compile (and build the lazy frames) on a thread with no active
+    // session; execution below runs with the session restored
+    def sessionless(run: => Validation): Validation = {
+      SparkSession.clearActiveSession()
+      try {
+        assert(SparkSession.getActiveSession.isEmpty)
+        run
+      } finally SparkSession.setActiveSession(spark)
+    }
+    val cases = Seq(
+      ("typed", Seq("graft_all_in_range"),
+        sessionless(Validator.validate(seqs, spec)), Validator.validate(seqs, spec)),
+      ("variant", Seq("graft_variant_kind", "graft_variant_all_in_range"),
+        sessionless(Validator.validateJson(json, spec, "json")),
+        Validator.validateJson(json, spec, "json")))
+    for ((backend, natives, bare, normal) <- cases) {
+      for (frame <- Seq(bare.verdicts, bare.violations)) {
+        val p = frame.queryExecution.executedPlan.toString
+        natives.foreach(fn => assert(p.contains(fn), s"$backend: no $fn in\n$p"))
+        assert(!p.contains("schema_of_variant") && !p.contains("forall("),
+          s"$backend: fallback form in\n$p")
+      }
+      assert(sortedRows(bare.verdicts) == sortedRows(normal.verdicts), backend)
+      assert(sortedRows(bare.violations) == sortedRows(normal.violations), backend)
+      assert(bare.violations.where(col("constraint_id") === ".tokens/items").count() > 0,
+        s"$backend: no .tokens/items violation — vacuous comparison")
+    }
   }
 
   test("graft_dot runs inside whole-stage codegen (the HOF form cannot)") {

@@ -25,6 +25,33 @@ object Harness {
     s
   }
 
+  /** Runs `body(mode)` once per evaluation path of the native expressions,
+    * then restores the session conf:
+    *  - "generated": whole-stage codegen with no silent fallback to eval,
+    *    and ConvertToLocalRelation excluded so a local input is not folded
+    *    away at plan time through `eval`;
+    *  - "interpreted": the expressions' `eval`.
+    * An expression under a CodegenFallback parent (`forall`, the violation
+    * frame's `filter`) is evaluated through `eval` in both modes; an
+    * aggregate's inputs (the verdict counts) are generated code. */
+  def inBothModes(body: String => Unit): Unit = {
+    val modes = Seq(
+      "generated" -> Map("spark.sql.optimizer.excludedRules" ->
+        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation",
+        "spark.sql.codegen.fallback" -> "false", "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+      "interpreted" -> Map("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for ((mode, conf) <- modes) {
+      val before = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body(mode)
+      finally before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
+
   /** Validate a single value (given as a SQL expression) against a schema in
     * root-value mode; returns ordered (message, path). */
   def errorsForValue(schemaJson: String, sqlValueExpr: String): Vector[(String, String)] = {

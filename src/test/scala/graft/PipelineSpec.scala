@@ -720,6 +720,23 @@ class PipelineSpec extends AnyFunSuite {
     assert(inline == staged && staged == byKey)
   }
 
+  test("simhash pairs skip NULL texts; simhashByKey skips NULL doc_ids") {
+    // every NULL text hashes to 0, like an empty one: without the guard all
+    // three paired at Hamming 0
+    val docs = Seq[(Long, String)]((1L, null), (2L, ""), (3L, null), (4L, "alpha beta gamma"))
+      .toDF("doc_id", "text")
+    for (pairs <- Seq(Dedup.simhashNearDuplicates(docs, col("text"), col("doc_id")),
+                      Dedup.simhashCandidates(docs, col("text"), col("doc_id")))) {
+      val ids = pairs.select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(!ids.exists { case (a, b) => Set(a, b).exists(Set(1L, 3L)) }, ids.toSeq)
+    }
+    // two anonymous documents must not fold into one mixed simhash
+    val anon = Seq[(String, String)]((null, "delta epsilon"), (null, "zeta eta theta"))
+      .toDF("doc_id", "text")
+    val byKey = Dedup.simhashByKey(anon, col("text"), col("doc_id")).collect()
+    assert(byKey.isEmpty, byKey.toSeq)
+  }
+
   test("simhash near-dups: exact dup verified at hamming 0; distant text excluded") {
     val pairs = Dedup.simhashNearDuplicates(docsDf, col("text"), col("doc_id"),
         maxHamming = 6)
