@@ -127,16 +127,10 @@ object CrossRow {
     val id = uniqueId(key)
     val message = s"""Expected "$key" values to be unique across the dataset"""
 
-    val violations =
+    val dupRows =
       if (checkpointDups) {
         val dups = duplicateKeys(df, key).localCheckpoint()
-        df.select(col(part).as("part"), col(key))
-          .join(dups, Seq(key))
-          .select(
-            col("part"), col(key).cast(StringType).as("doc_id"),
-            lit(rank).as("rank"), lit(id).as("constraint_id"),
-            lit(s".$key").as("path"), col("cnt").cast(StringType).as("observed"),
-            lit(message).as("message"))
+        df.select(col(part).as("part"), col(key)).join(dups, Seq(key))
       } else {
         val candidates = dupCandidates(df, key, part)
           .localCheckpoint(false) // lazy: materializes on the first action
@@ -144,15 +138,9 @@ object CrossRow {
           .agg(count(lit(1)).as("cnt"))
           .where(col("cnt") > 1)
         candidates.join(dups, Seq(key)) // both sides tiny → AQE broadcasts
-          .select(
-            col("part"), col(key).cast(StringType).as("doc_id"),
-            lit(rank).as("rank"), lit(id).as("constraint_id"),
-            lit(s".$key").as("path"), col("cnt").cast(StringType).as("observed"),
-            lit(message).as("message"))
       }
-
-    Validation(verdictsFromViolations(partTotals(df, part),
-      violations, Seq(rank -> id)), violations)
+    checkValidation(df, part, violationRows(dupRows, col(key).cast(StringType), rank, id,
+      s".$key", col("cnt").cast(StringType), message), rank, id)
   }
 
   def uniqueId(key: String): String = s"dataset/unique:$key"
@@ -195,18 +183,9 @@ object CrossRow {
   def referential(df: DataFrame, column: String, dim: DataFrame, dimCol: String,
                   docId: String = "doc_id", part: String = "part",
                   rank: Int = BaseRank + 1): Validation = {
-    val id = referentialId(column)
     val fact = df.select(col(part).as("part"), col(docId).cast(StringType).as("doc_id"),
                          col(column))
-    val violations = new ForeignKey(column, dim, dimCol).orphans(fact)
-      .select(
-        col("part"), col("doc_id"),
-        lit(rank).as("rank"), lit(id).as("constraint_id"),
-        lit(s".$column").as("path"), col(column).cast(StringType).as("observed"),
-        lit(referentialMessage(column)).as("message"))
-
-    Validation(verdictsFromViolations(partTotals(df, part),
-      violations, Seq(rank -> id)), violations)
+    orphanValidation(df, part, new ForeignKey(column, dim, dimCol).orphans(fact), column, rank)
   }
 
   /** FK check for dimension tables TOO LARGE to broadcast (`referential`'s
@@ -227,21 +206,20 @@ object CrossRow {
   def referentialLargeDim(df: DataFrame, column: String, dim: DataFrame, dimCol: String,
                           docId: String = "doc_id", part: String = "part",
                           rank: Int = BaseRank + 1): Validation = {
-    val id = referentialId(column)
     val fact = df.select(col(part).as("part"), col(docId).cast(StringType).as("doc_id"),
                          col(column))
       .where(col(column).isNotNull)
     val orphanKeys = fact.select(col(column)).distinct()
       .join(dim.select(col(dimCol).as(column)), Seq(column), "left_anti")
-    val violations = fact.join(broadcast(orphanKeys), Seq(column))
-      .select(
-        col("part"), col("doc_id"),
-        lit(rank).as("rank"), lit(id).as("constraint_id"),
-        lit(s".$column").as("path"), col(column).cast(StringType).as("observed"),
-        lit(referentialMessage(column)).as("message"))
+    orphanValidation(df, part, fact.join(broadcast(orphanKeys), Seq(column)), column, rank)
+  }
 
-    Validation(verdictsFromViolations(partTotals(df, part),
-      violations, Seq(rank -> id)), violations)
+  /** The FK check's frames over its orphan (part, doc_id, `column`) rows. */
+  private def orphanValidation(df: DataFrame, part: String, orphans: DataFrame,
+                               column: String, rank: Int): Validation = {
+    val id = referentialId(column)
+    checkValidation(df, part, violationRows(orphans, col("doc_id"), rank, id, s".$column",
+      col(column).cast(StringType), referentialMessage(column)), rank, id)
   }
 
   /** Row-level cross-field consistency as a pluggable CompiledCheck, e.g.
@@ -256,6 +234,23 @@ object CrossRow {
       rank = rank,
       pass = coalesce(ok, lit(false)),
       observed = observed.cast(StringType))
+
+  /** Rows in the shared violation schema (part, doc_id, rank,
+    * constraint_id, path, observed, message): one per row of `rows`, which
+    * carries `part`; `docId` and `observed` are string Columns over it. */
+  private[graft] def violationRows(rows: DataFrame, docId: Column, rank: Int, id: String,
+                                   path: String, observed: Column,
+                                   message: String): DataFrame =
+    rows.select(col("part"), docId.as("doc_id"), lit(rank).as("rank"),
+      lit(id).as("constraint_id"), lit(path).as("path"), observed.as("observed"),
+      lit(message).as("message"))
+
+  /** A single cross-row check's frames: its violation rows, and its
+    * verdicts counted from them over `df`'s per-part totals. */
+  private[graft] def checkValidation(df: DataFrame, part: String, violations: DataFrame,
+                                     rank: Int, id: String): Validation =
+    Validation(verdictsFromViolations(partTotals(df, part), violations, Seq(rank -> id)),
+      violations)
 
   /** Verdicts as a pure function of violations, as the reference's result
     * status is a function of its error list (validator.cr:20-27): violation

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.dataset.CrossRow
 import graft.run.Validation
 
 /** Distribution-drift checks: KL divergence and PSI of a bucketed column's
@@ -115,11 +116,8 @@ object Drift {
       when(col("kl") <= klThreshold, 0L).otherwise(1L).as("violations"),
       (col("kl") <= klThreshold).as("pass"))
 
-    val violations = div.where(col("kl") > klThreshold).select(
-      col("part"), col("part").as("doc_id"), lit(rank).as("rank"),
-      lit(cid).as("constraint_id"), lit(".").as("path"),
-      format_string("kl=%.6f psi=%.6f", col("kl"), col("psi")).as("observed"),
-      lit(message).as("message"))
+    val violations = CrossRow.violationRows(div.where(col("kl") > klThreshold), col("part"),
+      rank, cid, ".", format_string("kl=%.6f psi=%.6f", col("kl"), col("psi")), message)
 
     Validation(verdicts, violations)
   }

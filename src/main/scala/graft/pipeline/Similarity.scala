@@ -27,7 +27,14 @@ object Similarity {
                      k: Int = 10): DataFrame = {
     val c = corpus.select(corpusId.as("corpus_id"), corpusVec.as("cv"))
     val q = queries.select(queryId.as("query_id"), queryVec.as("qv"))
-    val scored = c.join(broadcast(q))
+    topK(c.join(broadcast(q)), k)
+  }
+
+  /** Exact cosine top-k per query over its (query_id, qv, corpus_id, cv)
+    * candidate rows, a query never matching itself: (query_id, rank,
+    * corpus_id, cos). */
+  private def topK(candidates: DataFrame, k: Int): DataFrame = {
+    val scored = candidates
       .select(col("query_id"), col("corpus_id"),
         Dedup.cosine(col("cv"), col("qv")).as("cos"))
       .where(col("corpus_id") =!= col("query_id"))
@@ -178,16 +185,7 @@ object Similarity {
       s => s.getField("idx"))
     val q = withNorm(queries.select(queryId.as("query_id"), queryVec.as("qv")), col("qv"))
       .select(col("query_id"), col("qv"), explode(probes).as("centroid"))
-
-    val scored = assigned.join(broadcast(q), Seq("centroid"))
-      .select(col("query_id"), col("corpus_id"),
-        Dedup.cosine(col("cv"), col("qv")).as("cos"))
-      .where(col("corpus_id") =!= col("query_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("corpus_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("corpus_id"), round(col("cos"), 4).as("cos"))
+    topK(assigned.join(broadcast(q), Seq("centroid")), k)
   }
 
   def ivfTopK(corpus: DataFrame, corpusId: Column, corpusVec: Column,

@@ -630,6 +630,12 @@ class PipelineSpec extends AnyFunSuite {
     assert(dropped.nonEmpty && dropped.forall(_.getLong(2) == 12L))
     val pairs = Dedup.minhashCandidates(many, col("text"), col("doc_id"), maxBucket = 8)
     assert(pairs.count() == 0) // all buckets capped → pairs dropped, but counted above
+    // SimHash keeps the same ledger: one row per band (4), each of 12 members
+    val simDropped = Dedup.simhashBucketStats(many, col("text"), col("doc_id"), maxBucket = 8)
+      .collect()
+    assert(simDropped.map(_.getInt(0)).sorted.toSeq == (0 until 4), simDropped.toSeq)
+    assert(simDropped.forall(_.getLong(2) == 12L), simDropped.toSeq)
+    assert(Dedup.simhashCandidates(many, col("text"), col("doc_id"), maxBucket = 8).count() == 0)
   }
 
   test("connected components + near-dup drop list keep one representative per cluster") {
@@ -757,6 +763,38 @@ class PipelineSpec extends AnyFunSuite {
     val pairs = Dedup.embeddingNearDups(df, col("embedding"), col("vec_id"),
       dim = 8, maxBucket = 8)
     assert(pairs.count() == 0) // capped → dropped, but counted above
+  }
+
+  test("bucket cap boundary: cap members pair fully, one more drops into the ledger") {
+    val cap = 8
+    def allPairs(n: Int) = (for (a <- 1 to n; b <- a + 1 to n) yield (a.toLong, b.toLong)).toSet
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def texts(n: Int) = (1 to n).map(i => (i.toLong, "one boilerplate line at the cap"))
+      .toDF("doc_id", "text")
+    def vecs(n: Int) = (1 to n).map(i => (i.toLong, Array.tabulate(8)(j => math.sin(j + 1))))
+      .toDF("vec_id", "embedding")
+    for (n <- Seq(cap, cap + 1)) {
+      // n members share every band bucket: cap·(cap−1)/2 pairs at the cap,
+      // none above it, where each family's ledger holds the bucket with its size
+      val expected = if (n == cap) allPairs(n) else Set.empty[(Long, Long)]
+      val t = texts(n)
+      val e = vecs(n)
+      val families = Seq(
+        "minhash" -> (ids(Dedup.minhashCandidates(t, col("text"), col("doc_id"), maxBucket = cap)),
+          Dedup.minhashBucketStats(t, col("text"), col("doc_id"), maxBucket = cap), 8),
+        "simhash" -> (ids(Dedup.simhashNearDuplicates(t, col("text"), col("doc_id"), maxBucket = cap)),
+          Dedup.simhashBucketStats(t, col("text"), col("doc_id"), maxBucket = cap), 4),
+        "embedding" -> (ids(Dedup.embeddingNearDups(e, col("embedding"), col("vec_id"), dim = 8,
+            maxBucket = cap)),
+          Dedup.embeddingBucketStats(e, col("embedding"), col("vec_id"), dim = 8, maxBucket = cap), 1))
+      for ((family, (pairs, ledger, buckets)) <- families) {
+        assert(pairs == expected, s"$family, $n members")
+        val sizes = ledger.select("bucket_size").collect().map(_.getLong(0)).toSeq
+        assert(sizes == (if (n == cap) Nil else Seq.fill(buckets)(n.toLong)), s"$family, $n members")
+      }
+      assert(ids(Dedup.simhashCandidates(t, col("text"), col("doc_id"), maxBucket = cap)) == expected)
+    }
   }
 
   test("embedding near-dups via hyperplane LSH find planted duplicates") {

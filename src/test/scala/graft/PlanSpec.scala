@@ -323,6 +323,25 @@ class PlanSpec extends AnyFunSuite {
     gate(graft.pipeline.Dedup.embeddingNearDups(emb, col("embedding"), col("vec_id"), d))
   }
 
+  test("near-dup verify payloads ride the bucket collect: no join, one window") {
+    // the simhash and the vector travel inside the collected bucket, so the
+    // Hamming / cosine verify reads them out of the pair: a join back onto
+    // the hash pipeline would execute it again, a second window would size
+    // the buckets twice
+    import org.apache.spark.sql.catalyst.plans.logical
+    def gate(df: org.apache.spark.sql.DataFrame): Unit = {
+      val plan = df.queryExecution.optimizedPlan
+      assert(plan.collect { case j: logical.Join => j }.isEmpty, "join in:\n" + plan.treeString)
+      assert(plan.collect { case w: logical.Window => w }.size == 1,
+        "expected one window in:\n" + plan.treeString)
+    }
+    import spark.implicits._
+    val docs = Seq((1L, "alpha beta gamma"), (2L, "alpha beta gamma delta")).toDF("doc_id", "text")
+    gate(graft.pipeline.Dedup.simhashNearDuplicates(docs, col("text"), col("doc_id")))
+    val emb = Seq((1L, Array(1.0, 2.0, 3.0)), (2L, Array(1.0, 2.0, 3.5))).toDF("vec_id", "embedding")
+    gate(graft.pipeline.Dedup.embeddingNearDups(emb, col("embedding"), col("vec_id"), 3))
+  }
+
   test("uniqueness join-back: AQE splits the hot-key partition when the dup set can't broadcast") {
     // North-rule skew clause. The dup→row join-back normally broadcasts (dup
     // set ≪ table); in the degenerate case — table-scale dup set, broadcast
